@@ -87,9 +87,15 @@ def ingest_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def to_logentries(p: DataFrame) -> DataFrame:
     """The R4-R10 LogEntry projection over any payload-shaped DataFrame
-    (batch fixture or live stream) with columns conn_id, payload,
-    payload_str, client_ip, recv_ts. Works unchanged on a streaming
-    DataFrame — the projection is stateless."""
+    (batch fixture or live stream) with columns conn_id, payload (binary),
+    client_ip, recv_ts. Works unchanged on a streaming DataFrame — the
+    projection is stateless.
+
+    Every field comes from the raw payload bytes, as main.go:107,112 does:
+    ``substring`` of a binary column counts bytes, so the hex preview is the
+    first 48 bytes even when the payload is not valid UTF-8. ``hex`` emits
+    only 0-9A-F, so ``translate`` lower-cases it without loading the ICU
+    case tables that ``lower``'s first use in a JVM pulls in."""
     byte_count = F.octet_length("payload")
     return (
         p.where(byte_count > 0)
@@ -106,7 +112,7 @@ def to_logentries(p: DataFrame) -> DataFrame:
             "client_ip",
             F.substring_index("client_ip", ":", 1).alias("client_host"),
             byte_count.cast("long").alias("byte_count"),
-            F.lower(F.hex(F.substring("payload_str", 1, 48).cast("binary"))).alias("binary_data_hex"),
+            F.translate(F.hex(F.substring("payload", 1, 48)), "ABCDEF", "abcdef").alias("binary_data_hex"),
         )
     )
 
@@ -122,7 +128,6 @@ def logentries_from_socket_lines(lines: DataFrame, client_ip: str) -> DataFrame:
     parts = F.split("value", r"\|", 3)
     p = lines.select(
         parts.getItem(0).cast("long").alias("conn_id"),
-        parts.getItem(2).alias("payload_str"),
         parts.getItem(2).cast("binary").alias("payload"),
         F.lit(client_ip).alias("client_ip"),
         F.timestamp_seconds(parts.getItem(1).cast("long")).alias("recv_ts"),

@@ -48,6 +48,7 @@ allowlist entry, never silence.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 # Fixture tables whose row counts grow with scale factor. region/nation are
@@ -197,10 +198,11 @@ def lint_plan(root) -> list[Violation]:
     return uniq
 
 
-def lint_query(spark, builder, sf_dir: str) -> list[Violation]:
-    """Build the query with size-based broadcasts disabled and lint its
-    static physical plan. Nothing is executed (planning only), so the
-    sweep's cost is Catalyst analysis, not data movement."""
+@contextmanager
+def size_broadcasts_disabled(spark):
+    """Set both size-based broadcast thresholds to -1 for the block, so the
+    only broadcasts a plan made inside it keeps are explicit hints; the
+    session's previous values are restored on exit."""
     conf = spark.conf
     old = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -210,11 +212,31 @@ def lint_query(spark, builder, sf_dir: str) -> list[Violation]:
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
-        df = builder(spark, sf_dir)
-        return lint_plan(df._jdf.queryExecution().sparkPlan())
+        yield
     finally:
         conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         if old_aqe is not None:
             conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_aqe)
         else:
             conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+
+def lint_df(spark, df) -> list[Violation]:
+    """Lint ``df``'s static physical plan with size-based broadcasts
+    disabled. The analyzed plan is optimized and planned afresh inside
+    ``size_broadcasts_disabled``; analysis does not read the broadcast
+    thresholds, so this is the plan a build under those settings gets.
+    Nothing is executed (planning only)."""
+    jdf = df._jdf
+    jvm = spark._jvm
+    with size_broadcasts_disabled(spark):
+        fresh = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            jdf.sparkSession(), jdf.queryExecution().analyzed()
+        )
+        return lint_plan(fresh.queryExecution().sparkPlan())
+
+
+def lint_query(spark, builder, sf_dir: str) -> list[Violation]:
+    """Build the query and lint its static physical plan (``lint_df``), so
+    the sweep's cost is Catalyst analysis, not data movement."""
+    return lint_df(spark, builder(spark, sf_dir))

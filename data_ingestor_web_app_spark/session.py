@@ -5,6 +5,15 @@ Scale posture: these settings are what we'd ship on a 1000-executor cluster;
 shuffles (coalesce partitions, skew-join split, dynamic broadcast switch);
 session timezone is pinned UTC to reproduce the reference's UTC RFC3339
 timestamps (/root/reference/main.go:102) and keep DuckDB oracle parity.
+
+Streaming checkpoints (offset log, commit log, file-sink metadata log) go
+through Spark's FileSystem-based checkpoint manager, not its FileContext
+default. Without libhadoop, Hadoop's local FileContext forks ``readlink``
+eight times per rename: 24 processes per micro-batch of the listen-source
+stream (three log renames), most of its ``walCommit`` and
+``commitOffsets`` time. ``FileSystem.rename`` on a local path is a single
+rename(2) with no fork. That holds because the master is always
+``local[N]``, so every checkpoint sits on a local POSIX filesystem.
 """
 
 from __future__ import annotations
@@ -47,6 +56,15 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Checkpoints are local (the master is local[N]): FileSystem.rename
+        # is one rename(2), where FileContext forks readlink on every rename
+        # (see the module docstring). Spark itself falls back to this manager
+        # wherever FileContext is unavailable.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     # extra_conf only applies to the FIRST session in a process (getOrCreate
     # reuses an existing one) — used by tools/scale_probe.py to re-enable

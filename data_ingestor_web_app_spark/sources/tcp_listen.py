@@ -9,6 +9,11 @@ gap with a custom Python DataSource (Spark 4 `SimpleDataSourceStreamReader`)
 that LISTENS: `echo 'test data' | nc <host> <port>` — the reference's own
 deploy smoke (deploy.sh:174) — works verbatim against the engine.
 
+Each record is one row of ``SCHEMA``: ``conn_id bigint, client_ip string,
+payload binary, kind string, recv_epoch_ms bigint``. The payload stays raw
+bytes; `to_logentries` derives every LogEntry field from them (a payload
+need not be valid UTF-8), so no decoded copy is carried.
+
 Semantics mirrored from main.go:
 - accept loop with a monotonically increasing connection ordinal
   (main.go:219, 234: `atomic.AddUint64(&connectionID, 1)`) — this is a
@@ -62,10 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-SCHEMA = (
-    "conn_id bigint, client_ip string, payload binary, payload_str string, "
-    "kind string, recv_epoch_ms bigint"
-)
+SCHEMA = "conn_id bigint, client_ip string, payload binary, kind string, recv_epoch_ms bigint"
 
 
 def _journal_paths(journal_dir: str) -> tuple[str, str]:
@@ -93,12 +95,10 @@ def _journal_load(journal_dir: str) -> tuple[dict[int, tuple], int]:
                     d = json.loads(line)
                 except ValueError:
                     continue  # torn tail write from a crash — drop it
-                payload = base64.b64decode(d["p"])
                 records[int(d["i"])] = (
                     int(d["c"]),
                     d["a"],
-                    payload,
-                    payload.decode("utf-8", errors="replace"),
+                    base64.b64decode(d["p"]),
                     d["k"],
                     int(d["t"]),
                 )
@@ -214,22 +214,15 @@ class _Listener:
                     "c": rec[0],
                     "a": rec[1],
                     "p": base64.b64encode(rec[2]).decode(),
-                    "k": rec[4],
-                    "t": rec[5],
+                    "k": rec[3],
+                    "t": rec[4],
                 }
             )
             + "\n"
         )
 
     def _append(self, conn_id: int, client_ip: str, payload: bytes, kind: str) -> None:
-        rec = (
-            conn_id,
-            client_ip,
-            payload,
-            payload.decode("utf-8", errors="replace"),
-            kind,
-            self._now_ms(),
-        )
+        rec = (conn_id, client_ip, payload, kind, self._now_ms())
         with self._lock:
             if self._journal_f is not None:
                 # WAL-before-ack: the record is durable before the caller
@@ -316,17 +309,19 @@ class _Listener:
             return self._records[start_idx - self._base : end_idx - self._base]
 
     def prune(self, end_idx: int) -> None:
+        # Only the stream thread prunes, so the committed offset is written
+        # outside _lock: handlers' fsyncs and this one do not queue behind
+        # each other. Persist FIRST (atomic rename), then drop memory — a
+        # crash between the two just re-prunes.
+        if self._journal_dir:
+            _, com_path = _journal_paths(self._journal_dir)
+            tmp = com_path + ".tmp"
+            with open(tmp, "w") as f:
+                f.write(str(end_idx))
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, com_path)
         with self._lock:
-            if self._journal_dir:
-                # persist the committed offset FIRST (atomic rename), then
-                # drop memory — a crash between the two just re-prunes
-                _, com_path = _journal_paths(self._journal_dir)
-                tmp = com_path + ".tmp"
-                with open(tmp, "w") as f:
-                    f.write(str(end_idx))
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, com_path)
             keep = end_idx - self._base
             if keep > 0:
                 del self._records[:keep]
@@ -492,7 +487,6 @@ def tcp_listen_logentry_stream(
     payloads = raw.select(
         "conn_id",
         "payload",
-        "payload_str",
         "client_ip",
         F.timestamp_millis(F.col("recv_epoch_ms")).alias("recv_ts"),
     )

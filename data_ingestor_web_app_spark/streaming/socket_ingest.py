@@ -58,7 +58,6 @@ def socket_payload_stream(spark: SparkSession, host: str, port: int) -> DataFram
         # content key, NOT a connection id — see identity semantics above
         F.xxhash64("value").alias("conn_id"),
         F.col("value").cast("binary").alias("payload"),
-        F.col("value").alias("payload_str"),
         F.lit(f"{host}:{port}").alias("client_ip"),
         F.current_timestamp().alias("recv_ts"),
     )

@@ -25,3 +25,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL
+
+
+@pytest.fixture(scope="session")
+def batch_sweep(spark, sf_small):
+    """Every registered batch query built once, with what each registry-wide
+    plan guard checks (tests/batch_sweep.py). The eager-action lint's
+    action surface and exemptions decide how each query is built."""
+    from tests.batch_sweep import sweep
+    from tests.test_eager_action_lint import ACTIONS, ALLOWED
+
+    return sweep(spark, sf_small, ACTIONS, ALLOWED)

@@ -15,13 +15,8 @@ driver-loop / structural queries whose collects are bounded by construction
 
 from __future__ import annotations
 
-import pytest
-
-# PySpark 4: pyspark.sql.DataFrame is the abstract facade; actions dispatch
-# on the classic concrete class — patch that one (the r9 lint-tool lesson).
-from pyspark.sql.classic.dataframe import DataFrame
-
-from data_ingestor_web_app_spark.registry import QUERIES
+from data_ingestor_web_app_spark.registry import QUERIES, STREAM_PREFIXES
+from tests.batch_sweep import EagerAction, actions_raise
 
 # r10 (ADVICE r9): isEmpty/show/foreach/foreachPartition added so the
 # enforcing surface matches tools/lint_eager.py's discovery surface — a
@@ -40,11 +35,10 @@ ACTIONS = [
     "foreachPartition",
 ]
 
-# Streaming/sink builders execute a replayed stream by contract — they get
-# their own lint pass below (test_no_eager_actions_stream_builders) with a
-# separately reviewed allowlist, instead of a wholesale skip (VERDICT r9
-# item 7).
-_STREAM_PREFIXES = ("stream_", "sink_")
+# Streaming/sink builders (``STREAM_PREFIXES``) execute a replayed stream
+# by contract — they get their own lint pass below
+# (test_no_eager_actions_stream_builders) with a separately reviewed
+# allowlist, instead of a wholesale skip (VERDICT r9 item 7).
 
 # name -> documented bound for the build-time action(s). Every entry is a
 # deliberate, reviewed exemption; remove the entry when the query is
@@ -89,38 +83,7 @@ STREAM_ALLOWED: dict[str, str] = {
 }
 
 
-class _EagerAction(Exception):
-    pass
-
-
-def _run_lint(spark, sf_small, names: list[str], allowed: dict[str, str]) -> None:
-    orig = {a: getattr(DataFrame, a) for a in ACTIONS}
-
-    def trip(name):
-        def inner(self, *args, **kwargs):
-            raise _EagerAction(name)
-
-        return inner
-
-    offenders: list[str] = []
-    errors: list[str] = []
-    stale_allow = set(allowed)
-    try:
-        for a in ACTIONS:
-            setattr(DataFrame, a, trip(a))
-        for name in names:
-            if name in allowed:
-                stale_allow.discard(name)
-                continue  # documented, reviewed exemption; skip the build
-            try:
-                QUERIES[name](spark, sf_small)
-            except _EagerAction as exc:
-                offenders.append(f"{name}: .{exc}() at build time")
-            except Exception as exc:  # noqa: BLE001 — surface, don't crash
-                errors.append(f"{name}: {type(exc).__name__}: {exc}"[:160])
-    finally:
-        for a in ACTIONS:
-            setattr(DataFrame, a, orig[a])
+def _assert_clean(errors: list[str], offenders: list[str], stale_allow: set[str]) -> None:
     assert not errors, "query build errors under the lint:\n" + "\n".join(errors)
     assert not offenders, (
         "Spark action executed while BUILDING the plan — fold the bounded "
@@ -133,9 +96,38 @@ def _run_lint(spark, sf_small, names: list[str], allowed: dict[str, str]) -> Non
     )
 
 
-def test_no_eager_actions_at_build_time(spark, sf_small):
-    names = [n for n in sorted(QUERIES) if not n.startswith(_STREAM_PREFIXES)]
-    _run_lint(spark, sf_small, names, ALLOWED)
+def _run_lint(spark, sf_small, names: list[str], allowed: dict[str, str]) -> None:
+    offenders: list[str] = []
+    errors: list[str] = []
+    stale_allow = set(allowed)
+    with actions_raise(ACTIONS):
+        for name in names:
+            if name in allowed:
+                stale_allow.discard(name)
+                continue  # documented, reviewed exemption; skip the build
+            try:
+                QUERIES[name](spark, sf_small)
+            except EagerAction as exc:
+                offenders.append(f"{name}: .{exc}() at build time")
+            except Exception as exc:  # noqa: BLE001 — surface, don't crash
+                errors.append(f"{name}: {type(exc).__name__}: {exc}"[:160])
+    _assert_clean(errors, offenders, stale_allow)
+
+
+def test_no_eager_actions_at_build_time(batch_sweep):
+    """Every batch builder is built once under the probe by the shared
+    sweep (tests/batch_sweep.py); ALLOWED names are built unpatched."""
+    offenders = [
+        f"{name}: .{b.eager_action}() at build time"
+        for name, b in batch_sweep.items()
+        if b.eager_action
+    ]
+    errors = [
+        f"{name}: {type(b.eager_error).__name__}: {b.eager_error}"[:160]
+        for name, b in batch_sweep.items()
+        if b.eager_error is not None
+    ]
+    _assert_clean(errors, offenders, set(ALLOWED) - set(batch_sweep))
 
 
 def test_no_eager_actions_stream_builders(spark, sf_small):
@@ -144,5 +136,5 @@ def test_no_eager_actions_stream_builders(spark, sf_small):
     wall (~4 min for 31 builders) — but it proves the replay pipelines
     themselves never fall back to driver-side batch actions outside the
     three reviewed STREAM_ALLOWED contracts."""
-    names = [n for n in sorted(QUERIES) if n.startswith(_STREAM_PREFIXES)]
+    names = [n for n in sorted(QUERIES) if n.startswith(STREAM_PREFIXES)]
     _run_lint(spark, sf_small, names, STREAM_ALLOWED)

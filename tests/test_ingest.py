@@ -49,6 +49,30 @@ def test_ingest_record_golden(spark):
     assert rec[0]["hex"] == "746573742064617461"  # `echo -n 'test data' | xxd -p`
 
 
+def test_logentry_hex_is_raw_byte_prefix(spark):
+    """Batch to_logentries hex-encodes the first 48 payload BYTES (main.go:112
+    %x over the raw bytes): invalid UTF-8 is kept byte for byte, and a
+    multi-byte text is cut at 48 bytes, not 48 characters."""
+    from data_ingestor_web_app_spark.ingest.records import to_logentries
+
+    non_utf8 = b"\xff\x00\x10\x80GPS"
+    multibyte = ("héllo wörld" * 10).encode()
+    df = spark.createDataFrame(
+        [(1, bytearray(non_utf8)), (2, bytearray(multibyte))], "conn_id long, payload binary"
+    ).select(
+        "conn_id",
+        "payload",
+        F.lit("10.0.0.1:4000").alias("client_ip"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("recv_ts"),
+    )
+    got = {r["conn_id"]: r for r in to_logentries(df).collect()}
+    assert got[1]["binary_data_hex"] == "ff001080475053"
+    assert got[1]["byte_count"] == 7
+    assert got[2]["binary_data_hex"] == multibyte[:48].hex()
+    assert len(got[2]["binary_data_hex"]) == 96
+    assert got[2]["byte_count"] == len(multibyte)
+
+
 def test_hex_roundtrip_properties(spark):
     """Property: decode(unhex(lower(hex(x)))) == x for printable strings
     (SURVEY §5 property-based checks; inputs batched into one DataFrame)."""

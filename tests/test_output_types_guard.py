@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from data_ingestor_web_app_spark.registry import ORACLES, QUERIES
+from data_ingestor_web_app_spark.registry import ORACLES, STREAM_PREFIXES
 
 _COMPLEX = (T.ArrayType, T.MapType, T.StructType)
 
@@ -31,22 +31,23 @@ _COMPLEX = (T.ArrayType, T.MapType, T.StructType)
 # already covered by test_streaming.py; none of them are driver-hash checked
 # with complex types (guard below still covers every other oracle-backed
 # name, and the builder asserts streaming results are flat strings/longs).
-_SKIP_PREFIXES = ("stream_", "sink_")
+# These are the ``STREAM_PREFIXES`` names; the shared sweep
+# (tests/batch_sweep.py) builds every other query once.
 
 
-def test_no_complex_types_in_oracle_backed_outputs(spark, sf_small):
+def test_no_complex_types_in_oracle_backed_outputs(batch_sweep):
     offenders: list[str] = []
     errors: list[str] = []
     for name in sorted(ORACLES):
-        if name.startswith(_SKIP_PREFIXES):
+        if name.startswith(STREAM_PREFIXES):
             continue
-        try:
-            schema = QUERIES[name](spark, sf_small).schema
-        except Exception as exc:  # noqa: BLE001 — surface, don't crash the loop
+        b = batch_sweep[name]
+        if b.build_error is not None:
+            exc = b.build_error
             errors.append(f"{name}: {type(exc).__name__}: {exc}")
             continue
         bad = [
-            f.name for f in schema.fields if isinstance(f.dataType, _COMPLEX)
+            f.name for f in b.schema.fields if isinstance(f.dataType, _COMPLEX)
         ]
         if bad:
             offenders.append(f"{name}: {bad}")

@@ -20,12 +20,12 @@ fail too.
 
 from __future__ import annotations
 
-from data_ingestor_web_app_spark.plans.lint import lint_query
-from data_ingestor_web_app_spark.registry import QUERIES
+from data_ingestor_web_app_spark.plans.lint import lint_df, lint_query
+from data_ingestor_web_app_spark.registry import QUERIES, STREAM_PREFIXES
 
-# Streaming/sink builders EXECUTE a replay when invoked; their plans are
-# per-micro-batch and are covered by the streaming suites instead.
-_STREAM_PREFIXES = ("stream_", "sink_")
+# Streaming/sink builders (``STREAM_PREFIXES``) EXECUTE a replay when
+# invoked; their plans are per-micro-batch and are covered by the streaming
+# suites instead.
 
 ALLOWED: dict[str, str] = {
     # --- rank-filter / join-cardinality bounds the heuristic can't see ---
@@ -75,23 +75,22 @@ ALLOWED: dict[str, str] = {
 
 
 def _batch_queries() -> list[str]:
-    return [n for n in QUERIES if not n.startswith(_STREAM_PREFIXES)]
+    return [n for n in QUERIES if not n.startswith(STREAM_PREFIXES)]
 
 
-def test_registry_wide_plan_lint(spark, sf_small):
+def test_registry_wide_plan_lint(batch_sweep):
+    """Each query's static plan comes from the shared sweep's one build,
+    planned with size-based broadcasts disabled (tests/batch_sweep.py)."""
     flagged: dict[str, list[str]] = {}
     errors: dict[str, str] = {}
-    names = _batch_queries()
-    for i, name in enumerate(names):
-        try:
-            vs = lint_query(spark, QUERIES[name], sf_small)
-        except Exception as exc:  # noqa: BLE001 — planning failure is a finding
+    for name in _batch_queries():
+        b = batch_sweep[name]
+        exc = b.build_error if b.build_error is not None else b.lint_error
+        if exc is not None:  # planning failure is a finding
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             continue
-        if vs:
-            flagged[name] = [str(v) for v in vs]
-        if i % 100 == 99:
-            spark.catalog.clearCache()
+        if b.lint:
+            flagged[name] = [str(v) for v in b.lint]
     assert not errors, f"queries failed to PLAN during the lint sweep: {errors}"
 
     undeclared = {n: v for n, v in flagged.items() if n not in ALLOWED}
@@ -104,6 +103,32 @@ def test_registry_wide_plan_lint(spark, sf_small):
     assert not stale, (
         f"stale ALLOWED entries (no longer flagged or not registered): {stale}"
     )
+
+
+def test_lint_query_matches_the_sweep(spark, sf_small, batch_sweep):
+    """tools/lint_plans.py lints through ``lint_query``; it reports what
+    this guard reports, and leaves the session's thresholds as it found
+    them."""
+    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    for name in ("opt_secretary_stopping", "agg_groupby"):
+        got = [str(v) for v in lint_query(spark, QUERIES[name], sf_small)]
+        assert got == [str(v) for v in batch_sweep[name].lint], name
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
+
+
+def test_lint_df_keeps_only_hinted_broadcasts(spark, sf_small):
+    """A self-join of the raw events scan is broadcast by size at fixture
+    scale; the lint plans it without size-based broadcasts, so only an
+    explicit hint is flagged."""
+    from pyspark.sql import functions as F
+
+    from data_ingestor_web_app_spark import io
+
+    ev = io.table(spark, sf_small, "events")
+    keys = ev.select("event_id")
+    assert lint_df(spark, ev.join(keys, "event_id")) == []
+    hinted = lint_df(spark, ev.join(F.broadcast(keys), "event_id"))
+    assert [v.kind for v in hinted] == ["broadcast-fact"]
 
 
 def test_allowlist_entries_are_registered():

@@ -242,6 +242,18 @@ def test_checkpoint_resume_after_stop(spark, sf_small, tmp_path):
     assert got == want
 
 
+def test_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """Streaming checkpoints go through FileSystem-based renames (one
+    rename(2) on the local filesystem) rather than FileContext's, which
+    fork helper processes per file without libhadoop."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
 def test_admission_control_bounds_batch_size(spark, sf_small, tmp_path):
     """R18 admission control, Spark-style: the reference sheds load by
     capping concurrent connections (main.go: semaphore of 1000) — a

@@ -95,6 +95,43 @@ def test_nc_smoke_logentries_and_ack(spark):
         q.stop()
 
 
+# Payloads whose bytes and UTF-8 characters disagree: invalid UTF-8, and
+# two-byte characters that put byte 48 inside a character.
+RAW_PAYLOADS = [b"\xff\x00\x10\x80GPS", ("héllo wörld" * 10).encode()]
+
+
+def test_listen_hex_is_raw_byte_prefix(spark):
+    """main.go:112 hex-encodes the payload BYTES: a non-UTF-8 payload keeps
+    its exact bytes, and the preview is the first 48 bytes (96 hex
+    characters), not 48 decoded characters."""
+    port = _free_port()
+    q = (
+        tcp_listen_logentry_stream(spark, "127.0.0.1", port)
+        .writeStream.format("memory")
+        .queryName("tcp_listen_raw_bytes")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        conn_ids = {_send_acked(port, p): p for p in RAW_PAYLOADS}
+
+        def both_rows():
+            rows = spark.table("tcp_listen_raw_bytes").collect()
+            return rows if len(rows) >= 2 else None
+
+        rows = _wait(both_rows, msg="LogEntry rows for the raw-byte payloads")
+    finally:
+        q.stop()
+    got = {r["conn_id"]: r for r in rows}
+    assert set(got) == set(conn_ids)
+    for cid, p in conn_ids.items():
+        assert got[cid]["byte_count"] == len(p)
+        assert got[cid]["binary_data_hex"] == p[:48].hex()
+    hexes = sorted((r["binary_data_hex"] for r in rows), key=len)
+    assert hexes[0] == "ff001080475053"
+    assert len(hexes[1]) == 96
+
+
 def test_reject_above_cap_and_recovery(spark):
     """main.go:252-255 shed-load: with maxConnections=2 and both slots held
     by open connections, further connections are closed UNREAD and show up
@@ -250,9 +287,11 @@ def test_exactly_once_across_crash_restart(spark, tmp_path):
         return p
 
     def start():
-        s = tcp_listen_stream(
-            spark, "127.0.0.1", port, journal_dir=jdir
-        ).select("conn_id", "payload_str", checked("payload_str").alias("checked"))
+        s = (
+            tcp_listen_stream(spark, "127.0.0.1", port, journal_dir=jdir)
+            .withColumn("payload_str", F.col("payload").cast("string"))
+            .select("conn_id", "payload_str", checked("payload_str").alias("checked"))
+        )
         return (
             s.writeStream.format("parquet")
             .option("path", out)
@@ -324,7 +363,7 @@ def test_wal_gap_refuses_resume(tmp_path):
             for i in indices:
                 f.write(
                     _Listener._journal_line(
-                        i, (i + 1, "127.0.0.1", b"x%d" % i, f"x{i}", "data", 1000 + i)
+                        i, (i + 1, "127.0.0.1", b"x%d" % i, "data", 1000 + i)
                     )
                 )
             if torn_tail:
@@ -349,7 +388,65 @@ def test_wal_gap_refuses_resume(tmp_path):
     lst = start(torn_dir)
     try:
         with lst._lock:
-            assert [r[3] for r in lst._records] == ["x0", "x1", "x2"]
+            assert [r[2] for r in lst._records] == [b"x0", b"x1", b"x2"]
             assert lst._base == 0
+    finally:
+        lst.stop()
+
+
+def test_prune_during_appends_keeps_every_record(tmp_path):
+    """prune() persists the committed offset outside the listener lock while
+    handler threads keep appending: every record is drained exactly once at
+    its absolute index, and a restart resumes at the last persisted offset
+    with exactly the uncommitted tail."""
+    import sys
+    import threading
+
+    from data_ingestor_web_app_spark.sources.tcp_listen import _Listener
+
+    jdir = str(tmp_path / "wal")
+
+    def start():
+        return _Listener(
+            "127.0.0.1", _free_port(), max_connections=4, max_workers=2,
+            read_timeout_sec=5.0, journal_dir=jdir,
+        )
+
+    n_threads, per_thread = 8, 40
+    total = n_threads * per_thread
+
+    def handler(k):
+        for i in range(per_thread):
+            lst._append(k * per_thread + i, "127.0.0.1", b"p%d" % (k * per_thread + i), "data")
+
+    lst = start()
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    seen, committed = [], 0
+    try:
+        threads = [threading.Thread(target=handler, args=(k,)) for k in range(n_threads)]
+        for t in threads:
+            t.start()
+        while any(t.is_alive() for t in threads):
+            rows, end = lst.drain(committed)
+            seen.extend(rows)
+            lst.prune(end)
+            committed = end
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+        rows, end = lst.drain(committed)
+        seen.extend(rows)
+    finally:
+        sys.setswitchinterval(old)
+        lst.stop()
+    assert end == total
+    assert sorted(r[0] for r in seen) == list(range(total))
+    assert all(r[2] == b"p%d" % r[0] for r in seen)
+
+    lst = start()
+    try:
+        assert lst._base == committed
+        assert [r[0] for r in lst._records] == [r[0] for r in seen[committed:]]
     finally:
         lst.stop()

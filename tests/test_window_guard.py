@@ -17,13 +17,12 @@ reviewed, and any NEW offender fails the suite).
 
 from __future__ import annotations
 
-from data_ingestor_web_app_spark.plans.window_audit import audit_plan
-from data_ingestor_web_app_spark.registry import QUERIES
+from data_ingestor_web_app_spark.registry import QUERIES, STREAM_PREFIXES
 
-# Streaming/sink builders replay real streams; their per-microbatch plans are
-# audited by their own pytest files, and their post-hoc windows run on
-# memory-sink snapshot frames bounded by emission counts.
-_SKIP_PREFIXES = ("stream_", "sink_")
+# Streaming/sink builders (``STREAM_PREFIXES``) replay real streams; their
+# per-microbatch plans are audited by their own pytest files, and their
+# post-hoc windows run on memory-sink snapshot frames bounded by emission
+# counts.
 
 # name -> documented bound for the global window over raw rows.
 # Every entry is a deliberate, reviewed exemption; remove the entry when the
@@ -50,20 +49,21 @@ ALLOWED: dict[str, str] = {
 }
 
 
-def test_no_global_window_over_raw_scan(spark, sf_small):
+def test_no_global_window_over_raw_scan(batch_sweep):
+    """Each query's optimized plan comes from the shared sweep's one build
+    (tests/batch_sweep.py)."""
     offenders: list[str] = []
     errors: list[str] = []
     stale_allow = set(ALLOWED)
     for name in sorted(QUERIES):
-        if name.startswith(_SKIP_PREFIXES):
+        if name.startswith(STREAM_PREFIXES):
             continue
-        try:
-            df = QUERIES[name](spark, sf_small)
-            tree = df._jdf.queryExecution().optimizedPlan().treeString()
-        except Exception as exc:  # noqa: BLE001 — surface, don't crash the loop
+        b = batch_sweep[name]
+        exc = b.build_error if b.build_error is not None else b.window_error
+        if exc is not None:
             errors.append(f"{name}: {type(exc).__name__}: {exc}")
             continue
-        viol = audit_plan(tree)
+        viol = b.window
         if not viol:
             continue
         if name in ALLOWED:

@@ -45,7 +45,7 @@ def main() -> None:
     sf = "/root/testdata/sf0.001"
     report: dict[str, list[str]] = {}
     errors: dict[str, str] = {}
-    names = [n for n in sorted(registry.QUERIES) if not n.startswith(("stream_", "sink_"))]
+    names = [n for n in sorted(registry.QUERIES) if not n.startswith(registry.STREAM_PREFIXES)]
     for i, name in enumerate(names):
         fired.clear()
         try:

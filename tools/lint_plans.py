@@ -1,8 +1,9 @@
 """Ad-hoc runner for the registry-wide static-plan lint (VERDICT r10 item 1).
 
 Sweeps every registered batch query through plans.lint.lint_query and prints
-one line per violation; the enforcing copy of this sweep lives in
-tests/test_plan_lint.py with the reviewed allowlist.
+one line per violation. The enforcing copy, tests/test_plan_lint.py with the
+reviewed allowlist, lints the shared test sweep's builds through
+plans.lint.lint_df, the function lint_query calls, so both see the same plan.
 
 Usage: python tools/lint_plans.py [--sf /root/testdata/sf0.001] [names...]
 """
@@ -20,8 +21,6 @@ from data_ingestor_web_app_spark import registry
 from data_ingestor_web_app_spark.plans.lint import lint_query
 from data_ingestor_web_app_spark.session import get_spark
 
-STREAM_PREFIXES = ("stream_", "sink_")
-
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -34,7 +33,7 @@ def main() -> None:
     spark = get_spark("plan-lint")
     spark.sparkContext.setLogLevel("ERROR")
     names = args.names or [
-        n for n in registry.QUERIES if not n.startswith(STREAM_PREFIXES)
+        n for n in registry.QUERIES if not n.startswith(registry.STREAM_PREFIXES)
     ]
     sink = open(args.out, "w") if args.out else None
     n_bad = 0

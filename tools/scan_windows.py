@@ -13,8 +13,6 @@ from data_ingestor_web_app_spark import registry
 from data_ingestor_web_app_spark.plans.window_audit import audit_plan
 from data_ingestor_web_app_spark.session import get_spark
 
-SKIP = ("stream_", "sink_")
-
 
 def main() -> None:
     registry.load_all()
@@ -25,7 +23,7 @@ def main() -> None:
     offenders: list[str] = []
     errors: list[str] = []
     for name in sorted(registry.QUERIES):
-        if name.startswith(SKIP):
+        if name.startswith(registry.STREAM_PREFIXES):
             continue
         try:
             df = registry.QUERIES[name](spark, sf)
