@@ -1,5 +1,5 @@
 """Wave-150: the two remaining Python-boundary APIs — cogrouped
-applyInPandas and grouped applyInArrow. Back-of-registry module.
+applyInPandas and grouped applyInArrow.
 """
 
 from __future__ import annotations

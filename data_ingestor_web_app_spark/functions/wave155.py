@@ -1,5 +1,5 @@
 """Wave-155: deterministic UUIDv3 key generation and conjugate Beta
-posterior summaries. Back-of-registry module.
+posterior summaries.
 """
 
 from __future__ import annotations

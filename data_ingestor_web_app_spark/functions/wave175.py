@@ -1,5 +1,5 @@
 """Wave-175: check-digit schemes — Luhn, Damm, and ISO 7064 mod-97 —
-as pure integer folds. Back-of-registry module.
+as pure integer folds.
 
 Data-quality engines validate identifiers (cards, IBANs, device serials)
 at ingest; these are the three classic schemes, each exactly replayable:

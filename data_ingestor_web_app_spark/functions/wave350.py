@@ -1,7 +1,7 @@
 """Wave-350: the lambda higher-order-function shelf — transform /
 filter / exists / forall / aggregate / zip_with over per-document
 token arrays, the SQL:2016-era array-lambda surface (Spark HOFs vs
-DuckDB list lambdas). Back-of-registry module.
+DuckDB list lambdas).
 """
 
 from __future__ import annotations

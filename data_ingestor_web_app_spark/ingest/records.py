@@ -30,7 +30,6 @@ def payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         F.col("doc_id").alias("conn_id"),
         F.col("text").cast("binary").alias("payload"),
-        F.col("text").alias("payload_str"),
         F.concat(
             F.lit("10.0."),
             (F.col("doc_id") % 256).cast("string"),
@@ -135,27 +134,30 @@ def logentries_from_socket_lines(lines: DataFrame, client_ip: str) -> DataFrame:
     return to_logentries(p)
 
 
-def _go_quote(s: str) -> str:
-    """Replicate Go's fmt.Sprintf("%q", s) for the payload preview
-    (main.go:113). Go double-quotes the string and escapes per strconv.Quote:
+def _go_quote(b: bytes) -> str:
+    """Replicate Go's fmt.Sprintf("%q", b) for the payload preview
+    (main.go:113). Go double-quotes the bytes and escapes per strconv.Quote:
     \\ and " get backslashes; control chars use Go escape letters or \\x;
-    printable unicode stays literal."""
+    printable unicode stays literal; each byte that is not part of valid
+    UTF-8 becomes \\xNN. The surrogateescape decode maps exactly those bytes
+    to U+DC80-U+DCFF."""
     out = ['"']
     special = {"\\": "\\\\", '"': '\\"', "\a": "\\a", "\b": "\\b", "\f": "\\f",
                "\n": "\\n", "\r": "\\r", "\t": "\\t", "\v": "\\v"}
-    for ch in s:
+    for ch in b.decode("utf-8", "surrogateescape"):
+        cp = ord(ch)
         if ch in special:
             out.append(special[ch])
+        elif 0xDC80 <= cp <= 0xDCFF:
+            out.append(f"\\x{cp - 0xDC00:02x}")
         elif ch.isprintable():
             out.append(ch)
+        elif cp < 0x20 or cp == 0x7F:
+            out.append(f"\\x{cp:02x}")
+        elif cp < 0x10000:
+            out.append(f"\\u{cp:04x}")
         else:
-            cp = ord(ch)
-            if cp < 0x100:
-                out.append(f"\\x{cp:02x}")
-            elif cp < 0x10000:
-                out.append(f"\\u{cp:04x}")
-            else:
-                out.append(f"\\U{cp:08x}")
+            out.append(f"\\U{cp:08x}")
     out.append('"')
     return "".join(out)
 
@@ -175,8 +177,9 @@ def go_quote_udf(s: pd.Series) -> pd.Series:
     """,
 )
 def udf_quote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R6: Go %q printable-quoting of the payload (main.go:113) as an
-    Arrow-vectorized pandas UDF (batch transfer, not row-at-a-time).
+    """R6: Go %q printable-quoting of the first 40 payload bytes
+    (main.go:113) as an Arrow-vectorized pandas UDF (batch transfer, not
+    row-at-a-time).
 
     Promoted from rows-only to hash-exact in r6 (VERDICT item 7): on
     printable-ASCII input, Go's strconv.Quote reduces to quote-wrapping
@@ -188,7 +191,7 @@ def udf_quote(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = payloads(spark, sf_dir)
     return p.select(
         "conn_id",
-        go_quote_udf(F.substring("payload_str", 1, 40)).alias("binary_data_string"),
+        go_quote_udf(F.substring("payload", 1, 40)).alias("binary_data_string"),
     )
 
 

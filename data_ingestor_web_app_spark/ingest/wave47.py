@@ -5,7 +5,6 @@ The reference is a TCP ingest server; these are the observability
 queries its operators would run over the enriched LogEntry stream
 (ingest/records.py): who talks from where (/24 rollups), how hot each
 connection runs, and what the WARN/INFO level gate is actually doing.
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestor_web_app_spark.io import table
+from data_ingestor_web_app_spark.llm import vector_extra  # noqa: F401  registers dedup_clusters
 from data_ingestor_web_app_spark.registry import ORACLES, query
 
 

@@ -1,8 +1,7 @@
 """Shared text-op constants + oracle fragments, with NO query registrations.
 
 Same rationale as llm/vector_common.py: cross-module oracle reuse without
-importing query modules (imports would register queries and shift the
-first-50 correctness-gate window; see registry._MODULES).
+importing query modules.
 """
 
 from __future__ import annotations

@@ -1,11 +1,8 @@
 """Shared vector helpers + oracle fragments, with NO query registrations.
 
 Exists so modules can share the JVM-side dot/norm higher-order-function
-builders and the sim_cosine_topk oracle SQL without importing each other:
-importing a query module registers its queries, and registration ORDER is
-load-bearing (the external correctness gate samples the first 50 registered
-queries — see registry._MODULES). Anything imported across query-module
-boundaries lives here instead.
+builders and the sim_cosine_topk oracle SQL without importing each other.
+Anything imported across query-module boundaries lives here instead.
 """
 
 from __future__ import annotations

@@ -737,8 +737,7 @@ def sim_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     When to prefer which: the HOF plan stays entirely JVM-side (no
     serialization) and wins at small dims; the matmul path amortizes Python
-    crossing over dim*batch work and wins as vectors widen — bench.py
-    carries both so the crossover is MEASURED, not guessed. Per-batch
+    crossing over dim*batch work and wins as vectors widen. Per-batch
     emission is top-5-per-query within the batch (bounded output per task),
     so the window's input is ~5*n_batches rows per query, not the corpus.
 

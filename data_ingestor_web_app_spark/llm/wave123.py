@@ -1,5 +1,5 @@
 """Wave-123: winnowing fingerprints (MOSS), Lee-style duplicated-substring
-spans, and DSIR hashed-ngram importance weights. Back-of-registry module.
+spans, and DSIR hashed-ngram importance weights.
 """
 
 from __future__ import annotations

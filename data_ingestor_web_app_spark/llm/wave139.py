@@ -1,5 +1,5 @@
 """Wave-139: greedy k-center seeding (farthest-first traversal) and
-ColBERT-style MaxSim late-interaction scoring. Back-of-registry module.
+ColBERT-style MaxSim late-interaction scoring.
 """
 
 from __future__ import annotations

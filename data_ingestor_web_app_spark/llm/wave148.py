@@ -1,5 +1,5 @@
 """Wave-148: pass@k estimation and self-BLEU-2 corpus diversity — the
-LLM-eval metric pair. Back-of-registry module.
+LLM-eval metric pair.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-149: Chao1 unseen-vocabulary estimation with Good-Turing mass,
-and Taylor's power law across event types. Back-of-registry module.
+and Taylor's power law across event types.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
 """Wave-153: TextRank keyword extraction and the HMM forward algorithm.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
 """Wave-154: distribution matching by derandomized rejection sampling.
-Back-of-registry module.
 """
 
 from __future__ import annotations

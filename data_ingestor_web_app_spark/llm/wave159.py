@@ -1,6 +1,5 @@
 """Wave-159: MinHash+LSH with a DuckDB-replayable hash family — promotes
 the flagship near-dup pipeline from rows-only to hash-exact verification.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-167: training-batch economics and distribution alignment —
 padding-waste length bucketing, unigram-LM holdout perplexity, and
-quantile normalization. Back-of-registry module.
+quantile normalization.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-169: LM smoothing classics and stylometry — interpolated
 Kneser-Ney bigrams, Witten-Bell unseen mass, and Burrows' Delta
-authorship distance between sources. Back-of-registry module.
+authorship distance between sources.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-176: LSH band-tuning S-curves, dedup threshold sweep, and
-parquet schema evolution. Back-of-registry module.
+parquet schema evolution.
 """
 
 from __future__ import annotations

@@ -8,8 +8,6 @@ the bucket-balance audit is the readout that tells you whether an LSH index
 will have straggler partitions at 100 TB. Both ride the repo's
 integer-quantization determinism pattern (floor to micro-units, BIGINT
 algebra) so every number is hash-exact cross-engine.
-
-Back-of-registry module.
 """
 
 from __future__ import annotations

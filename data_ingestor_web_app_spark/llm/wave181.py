@@ -1,5 +1,5 @@
 """Wave-181: FIFO inventory cost allocation and run-length compressibility
-of decoded images. Back-of-registry module.
+of decoded images.
 """
 
 from __future__ import annotations

@@ -8,8 +8,6 @@ unrolled k-means oracle would be enormous, while this twin fixes the
 codebook deterministically (the first 16 vectors' subvectors, quantized to
 micro-units) so encode -> assign -> ADC lookup -> top-k is exact integer
 algebra in both engines — the ADC *mechanics* get hash-exact verification.
-
-Back-of-registry module.
 """
 
 from __future__ import annotations

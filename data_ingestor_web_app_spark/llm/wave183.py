@@ -1,5 +1,5 @@
 """Wave-183: water-filling token-budget allocation across sources and the
-Kolmogorov-Smirnov score-separation statistic. Back-of-registry module.
+Kolmogorov-Smirnov score-separation statistic.
 """
 
 from __future__ import annotations

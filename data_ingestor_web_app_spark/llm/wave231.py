@@ -1,6 +1,6 @@
 """Wave-231: Walsh-Hadamard spectral energy with an exact integer
 Parseval certificate, AP-weighted rank correlation (tau_AP) in exact
-rational arithmetic, and a dense-key sequence gap audit. Back-of-registry.
+rational arithmetic, and a dense-key sequence gap audit.
 """
 
 from __future__ import annotations

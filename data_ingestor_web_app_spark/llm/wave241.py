@@ -1,7 +1,7 @@
 """Wave-241: RL-post-training data ops — group-relative advantage
 normalization (GRPO / RLOO baselines) over per-group rewards, and
 Monroe's "Fightin' Words" informative-Dirichlet log-odds for corpus
-contrast. Back-of-registry.
+contrast.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-253: inference-serving data ops — the prefix-cache (KV-cache
 sharing) savings audit at several prefix depths, and the speculative-
 decoding acceptance rate of a bigram draft model evaluated on a held-out
-document split. Back-of-registry.
+document split.
 """
 
 from __future__ import annotations

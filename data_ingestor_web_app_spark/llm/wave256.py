@@ -2,7 +2,7 @@
 (moment-matching greedy, 3 unrolled steps — the deterministic
 complement to sim_kcenter_greedy's coverage greedy) and the Cucconi
 location-scale rank test (the one two-sample test that catches BOTH
-shift and spread in a single statistic). Back-of-registry.
+shift and spread in a single statistic).
 """
 
 from __future__ import annotations

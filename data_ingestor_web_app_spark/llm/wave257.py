@@ -1,7 +1,7 @@
 """Wave-257: n-gram ladder diagnostics — the block-entropy ladder
 H_1..H_3 with conditional entropy rates (how much structure each extra
 token of context explains), and the cross-split n-gram novelty profile
-(the memorization/generalization screen). Back-of-registry.
+(the memorization/generalization screen).
 """
 
 from __future__ import annotations

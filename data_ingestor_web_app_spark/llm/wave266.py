@@ -2,7 +2,7 @@
 CKA between the two halves of the embedding space (the Kornblith metric,
 computed by the sim_mmd_poly d^2-moment trick: no n x n Gram matrices),
 and the standardized mortality/incident ratio with Byar's exact-ish
-confidence limits. Back-of-registry.
+confidence limits.
 """
 
 from __future__ import annotations

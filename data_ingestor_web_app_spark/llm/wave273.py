@@ -1,7 +1,7 @@
 """Wave-273: label-noise detection by confident learning (out-of-sample
 naive-Bayes disagreement with a margin, on the lang labels) and the
 empirical hazard profile of inter-event gaps (is the arrival process
-aging or clustering?). Back-of-registry.
+aging or clustering?).
 """
 
 from __future__ import annotations

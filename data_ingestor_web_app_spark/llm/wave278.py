@@ -2,7 +2,6 @@
 predict seeing it again? — the burstiness fact that breaks the Poisson
 word model) and the perimeter/compactness shape descriptor per decoded
 PNG (completing the Euler-number topology suite with geometry).
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-286: positional token entropy (the statistical boilerplate
 detector — templated documents have low-entropy openings) and the SQL
-VALUES inline-dimension surface op. Back-of-registry.
+VALUES inline-dimension surface op.
 """
 
 from __future__ import annotations

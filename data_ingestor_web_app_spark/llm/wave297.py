@@ -1,6 +1,5 @@
 """Wave-297: vocabulary-richness constants (Honoré R, Sichel S, Brunet W)
 per source and the Coleman-Liau readability index per document.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-303: temperature/alpha sampling weights for multilingual-style
-source mixing and the diagnostic likelihood-ratio family. Back-of-registry
-module.
+source mixing and the diagnostic likelihood-ratio family.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-304: Duncan/Massey-Denton segregation indices of languages across
 corpus sources and the Palma income-inequality ratio on order values.
-Back-of-registry module.
 """
 
 from __future__ import annotations

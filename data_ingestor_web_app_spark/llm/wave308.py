@@ -1,6 +1,5 @@
 """Wave-308: Gunning Fog + SMOG readability (complex-word based) and
 crest factor + spectral flatness over the decoded WAV column.
-Back-of-registry module.
 """
 
 from __future__ import annotations

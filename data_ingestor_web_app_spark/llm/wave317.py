@@ -1,6 +1,5 @@
 """Wave-317: inverted-index postings compression planning (Elias gamma/
 delta, Rice) and md5 hash-shard balance against balls-in-bins theory.
-Back-of-registry module.
 """
 
 from __future__ import annotations

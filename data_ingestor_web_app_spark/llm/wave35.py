@@ -4,8 +4,7 @@ zone-map stats, two-round BPE training.
 pipeline_ccnet_buckets composes the engine's own bigram-LM scorer into
 the CCNet head/middle/tail split (Wenzek et al. 2020, public);
 text_bpe_train_2rounds iterates the published BPE merge rule twice with
-full cross-engine verification of both chosen merges. Registered at the
-back of registry._MODULES.
+full cross-engine verification of both chosen merges.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-357: Viterbi decoding (Viterbi, IEEE IT 1967; Forney's 1973
 tutorial) of the same two-regime HMM as model_hmm_forward, in exact
-integer max-plus (micro-nat log domain). Back-of-registry module.
+integer max-plus (micro-nat log domain).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-367: exact-substring deduplication (Lee, Ippolito, Nystrom et al.,
 ACL 2022 — "Deduplicating Training Data Makes Language Models Better",
 the ExactSubstr side of that paper) and the Games-Howell post-hoc
-comparison (Games & Howell 1976). Back-of-registry module.
+comparison (Games & Howell 1976).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 Miers & Goldstein, ICML 2023 — "A Watermark for Large Language Models")
 and a MAUVE-style divergence frontier (Pillutla, Swayamdipta, Zellers,
 Thickstun, Welleck, Choi & Harchaoui, NeurIPS 2021) over quantized
-embedding histograms. Back-of-registry module.
+embedding histograms.
 """
 
 from __future__ import annotations

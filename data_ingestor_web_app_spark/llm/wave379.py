@@ -3,7 +3,7 @@ Matrán 2018; Dror et al., ACL 2019 — "Deep Dominance", the significance
 comparison protocol for deep-model score distributions) and a canary
 exposure audit (Carlini et al., USENIX Security 2019 "The Secret Sharer"
 — here the data-side leak scan: which corpus documents share long spans
-with planted canaries). Back-of-registry module.
+with planted canaries).
 """
 
 from __future__ import annotations

@@ -5,8 +5,7 @@ pipeline_corpus_e2e chains four curation stages the engine already
 verifies individually — structural quality gate, exact content dedup,
 eval-set decontamination, per-source manifest — into ONE declarative
 plan whose oracle replays every stage. This is the 'switch your corpus
-build to this engine' proof. Registered at the back of
-registry._MODULES.
+build to this engine' proof.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-62 (batch): RLHF-style preference-pair construction from a
-deterministic quality score. Back-of-registry module.
+deterministic quality score.
 """
 
 from __future__ import annotations

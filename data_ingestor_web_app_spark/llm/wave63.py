@@ -1,6 +1,6 @@
 """Wave-63: scene-cut detection over real encoded/decoded frame
 sequences, Matryoshka prefix-dimension recall, expected calibration
-error. Back-of-registry module.
+error.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-71: audio energy gating (VAD-style) over decoded WAV frames,
 Lorenz decile curve, leave-one-source-out data valuation.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-75: perceptual-hash image dedup pairs via hamming bands,
-session bounce rate. Back-of-registry module.
+session bounce rate.
 """
 
 from __future__ import annotations

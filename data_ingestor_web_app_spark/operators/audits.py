@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestor_web_app_spark.io import table
+from data_ingestor_web_app_spark.llm import lm_score  # noqa: F401  registers text_bigram_lm_score
 from data_ingestor_web_app_spark.registry import ORACLES, query
 
 

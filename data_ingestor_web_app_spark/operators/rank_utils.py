@@ -62,10 +62,7 @@ def ntile_from_index(index: Column, n_rows: Column, tiles: int) -> Column:
 
 # Shared oracle-SQL prelude: three "voters" rank the event types (daily
 # count, milli-value total, distinct-user reach) — the multi-metric ranking
-# fusion every leaderboard faces. Lives HERE (a non-registering helper
-# module) so wave328 can import it without triggering wave144's @query
-# registrations out of registry order (r10: a cross-wave import was pulling
-# three r7-checked names into the r10 driver window).
+# fusion every leaderboard faces.
 RANKERS_SQL = """
     m AS (
         SELECT event_type,

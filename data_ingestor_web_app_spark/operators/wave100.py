@@ -1,6 +1,5 @@
 """Wave-100: Tukey median polish in exact integers, blocking-quality
 metrics for fuzzy dedup, and instrumental-variable 2SLS estimation.
-Back-of-registry module.
 """
 
 from __future__ import annotations

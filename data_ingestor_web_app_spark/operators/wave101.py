@@ -1,5 +1,5 @@
 """Wave-101: Hill tail-index estimation, split conformal prediction
-intervals, and per-source duplication rates. Back-of-registry module.
+intervals, and per-source duplication rates.
 """
 
 from __future__ import annotations

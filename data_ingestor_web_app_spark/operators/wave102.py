@@ -1,6 +1,5 @@
 """Wave-102: negative-binomial method-of-moments, L-moments via
 rank-weighted sums, and the Ljung-Box portmanteau test.
-Back-of-registry module.
 """
 
 from __future__ import annotations

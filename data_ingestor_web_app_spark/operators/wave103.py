@@ -1,6 +1,5 @@
 """Wave-103: intraclass correlation (one-way ANOVA components), max
 drawdown with peak/trough dates, and UCB1 source selection.
-Back-of-registry module.
 """
 
 from __future__ import annotations

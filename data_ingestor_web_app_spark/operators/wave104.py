@@ -1,6 +1,5 @@
 """Wave-104: Brier-score Murphy decomposition, two-cohort log-rank
 test, and Hamilton largest-remainder budget apportionment.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-105: Kruskal-Wallis k-group rank test, quadtree image
-decomposition, and a pseudonymization audit. Back-of-registry module.
+decomposition, and a pseudonymization audit.
 """
 
 from __future__ import annotations

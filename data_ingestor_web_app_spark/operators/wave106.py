@@ -1,5 +1,5 @@
 """Wave-106: bitemporal as-of join, SPRT sequential monitoring, and
-hard-negative mining over embeddings. Back-of-registry module.
+hard-negative mining over embeddings.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-107: Epanechnikov KDE on a literal grid in exact integers,
 Grubbs' outlier test, and a seasonality-strength statistic.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-108: closed-form business-day arithmetic, Rocchio
 nearest-centroid classification, and Theil inequality decomposition.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-109: Markov removal-effect attribution, partial correlation,
-and user-journey perplexity. Back-of-registry module.
+and user-journey perplexity.
 """
 
 from __future__ import annotations

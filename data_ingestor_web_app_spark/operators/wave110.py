@@ -1,6 +1,5 @@
 """Wave-110: Sobel edge-orientation census, conversion-window
 sensitivity sweep, and an order-statistic median CI.
-Back-of-registry module.
 """
 
 from __future__ import annotations

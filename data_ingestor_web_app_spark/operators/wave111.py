@@ -1,5 +1,5 @@
 """Wave-111: Bowley quartile skewness, a Kimball junk dimension build,
-and the Lorenz asymmetry coefficient. Back-of-registry module.
+and the Lorenz asymmetry coefficient.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-112: confusion matrix with MCC, consistent-hash vs modulo
 rebalance audit, and week-over-week audience stability.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-113: RANSAC line fitting with derandomized candidate pairs,
 empty-side join semantics, and audio clipping QC.
-Back-of-registry module.
 """
 
 from __future__ import annotations

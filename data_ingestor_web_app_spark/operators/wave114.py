@@ -1,5 +1,5 @@
 """Wave-114: probability-of-beating A/B readout, PMI collocations,
-and a load-duration curve. Back-of-registry module.
+and a load-duration curve.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-115: Bollinger band breaches on exact integer sums, a local
 clustering (transitivity) profile by degree bucket, and a Weibull fit
-from per-group L-moments. Back-of-registry module.
+from per-group L-moments.
 """
 
 from __future__ import annotations

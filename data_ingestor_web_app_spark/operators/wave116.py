@@ -1,6 +1,6 @@
 """Wave-116: Cutler-smoothed RSI overbought/oversold audit, Kendall
 tau-b with full tie correction, and a Kimball periodic-snapshot fact
-with month-end cumulative balances. Back-of-registry module.
+with month-end cumulative balances.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-117: Hurst exponent via rescaled range over dyadic boxes, HITS
 hubs/authorities in exact integer arithmetic, and a hapax-legomena
-vocabulary profile. Back-of-registry module.
+vocabulary profile.
 """
 
 from __future__ import annotations

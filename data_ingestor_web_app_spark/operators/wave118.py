@@ -1,6 +1,6 @@
 """Wave-118: sample entropy of the daily series, priority sampling
 (weighted top-k with Horvitz-Thompson threshold weights), and a
-hash-bucket skew audit. Back-of-registry module.
+hash-bucket skew audit.
 """
 
 from __future__ import annotations

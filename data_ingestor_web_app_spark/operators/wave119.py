@@ -1,6 +1,6 @@
 """Wave-119: detrended fluctuation analysis alpha, token diversity
 indices (Simpson / Berger-Parker), and an integer Page-Hinkley drift
-detector. Back-of-registry module.
+detector.
 """
 
 from __future__ import annotations

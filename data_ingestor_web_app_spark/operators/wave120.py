@@ -1,6 +1,6 @@
 """Wave-120: NDCG@10 retrieval evaluation with integer-scaled
 discounts, a Kimball bridge-table weighted allocation, and histogram
-equalization over the real PNG decode path. Back-of-registry module.
+equalization over the real PNG decode path.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-121: MAP/MRR retrieval evaluation in exact LCM-scaled integers,
 Gries' deviation-of-proportions token dispersion, and interval
-coalescing (merge overlapping activity windows). Back-of-registry
-module.
+coalescing (merge overlapping activity windows).
 """
 
 from __future__ import annotations

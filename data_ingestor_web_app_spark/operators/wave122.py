@@ -1,6 +1,6 @@
 """Wave-122: Cochran's Q test for k related binary outcomes and a
-date-function edge-case parity panel. Back-of-registry module (the
-streaming member lives in streaming/wave122.py).
+date-function edge-case parity panel. The streaming member lives in
+streaming/wave122.py.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-124: integer-exact matrix profile (SSD) on the daily series and an
-unrolled k-core decomposition of the co-purchase graph. Back-of-registry
-module.
+unrolled k-core decomposition of the co-purchase graph.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-125: Apriori frequent itemsets over order baskets, IANA timezone /
-ISO-calendar function parity, and an inverted-index build. Back-of-registry
-module.
+ISO-calendar function parity, and an inverted-index build.
 """
 
 from __future__ import annotations

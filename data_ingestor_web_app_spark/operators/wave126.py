@@ -1,6 +1,5 @@
 """Wave-126: Dirichlet-smoothed query-likelihood retrieval, window
-distribution ranks, and circular hour-of-day statistics. Back-of-registry
-module.
+distribution ranks, and circular hour-of-day statistics.
 """
 
 from __future__ import annotations

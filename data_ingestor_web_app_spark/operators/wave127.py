@@ -1,5 +1,4 @@
 """Wave-127: reciprocal-rank-fusion of two retrieval rankers.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-128: unrolled multi-source BFS layers, Cramér–von Mises two-sample
-test, and exact 1-D Wasserstein distance. Back-of-registry module.
+test, and exact 1-D Wasserstein distance.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-129: energy distance, Brown–Forsythe (Levene) variance
-homogeneity, and the Friedman rank test. Back-of-registry module.
+homogeneity, and the Friedman rank test.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-130: Holm step-down multiple-testing control, global SSIM over the
 real PNG decode path, and offline greedy-bandit replay evaluation.
-Back-of-registry module.
 """
 
 from __future__ import annotations

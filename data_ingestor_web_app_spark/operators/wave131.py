@@ -1,6 +1,5 @@
 """Wave-131: hive-partitioned source round-trip, keyword-in-context
-concordance, and Kleinberg 2-state burst detection. Back-of-registry
-module.
+concordance, and Kleinberg 2-state burst detection.
 """
 
 from __future__ import annotations

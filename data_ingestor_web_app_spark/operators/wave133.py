@@ -1,5 +1,5 @@
 """Wave-133: effect sizes, f-divergence family over token distributions,
-and the V-optimal histogram DP. Back-of-registry module.
+and the V-optimal histogram DP.
 """
 
 from __future__ import annotations

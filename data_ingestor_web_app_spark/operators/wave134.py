@@ -1,5 +1,5 @@
 """Wave-134: peaks-over-threshold GPD fit, Hampel outlier filter, and the
-trimmed mean. Back-of-registry module.
+trimmed mean.
 """
 
 from __future__ import annotations

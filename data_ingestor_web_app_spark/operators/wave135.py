@@ -1,5 +1,5 @@
 """Wave-135: empirical copula tail dependence, transfer entropy, and
-integer-exact geohash encoding. Back-of-registry module.
+integer-exact geohash encoding.
 """
 
 from __future__ import annotations

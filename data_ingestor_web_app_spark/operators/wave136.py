@@ -1,5 +1,5 @@
 """Wave-136: Flesch-style readability, ABC revenue classification, and
-the newsvendor critical-fractile stocking level. Back-of-registry module.
+the newsvendor critical-fractile stocking level.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-137: lagged cross-correlation and a 1-lag Granger causality F
-test between the daily count and value series. Back-of-registry module.
+test between the daily count and value series.
 """
 
 from __future__ import annotations

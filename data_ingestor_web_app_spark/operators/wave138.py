@@ -1,6 +1,5 @@
 """Wave-138: hash-derived permutation test, Western Electric control
-rules, and greedy k-center seeding over embeddings. Back-of-registry
-module.
+rules, and greedy k-center seeding over embeddings.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-140: Bradley-Terry strength estimation and an edit-distance
-function-parity row. Back-of-registry module.
+function-parity row.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-142: DISTRIBUTE/SORT BY physical-layout SQL and pinball-loss
-forecast evaluation. Back-of-registry module.
+forecast evaluation.
 """
 
 from __future__ import annotations

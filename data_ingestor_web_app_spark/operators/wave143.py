@@ -1,6 +1,5 @@
 """Wave-143: dynamic time warping between weekly profiles, Harrell's
 C-index on a bounded cohort, and MATTR lexical diversity.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-144: rank aggregation — Borda/Condorcet voting, rank-biased
-overlap, and footrule/Kendall rank distances. Back-of-registry module.
+overlap, and footrule/Kendall rank distances.
 """
 
 from __future__ import annotations

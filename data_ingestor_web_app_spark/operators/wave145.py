@@ -1,5 +1,5 @@
 """Wave-145: Little's law via an independent sweep-line, fill-rate
-service levels, and EOQ lot sizing. Back-of-registry module.
+service levels, and EOQ lot sizing.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-146: instant-runoff voting and the Schulze beatpath method over
-daily preference ballots. Back-of-registry module.
+daily preference ballots.
 """
 
 from __future__ import annotations

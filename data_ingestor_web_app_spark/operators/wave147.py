@@ -1,5 +1,5 @@
 """Wave-147: group fairness audit — per-group confusion rates, parity
-gaps, and group calibration. Back-of-registry module.
+gaps, and group calibration.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-151: classic optimization rules — greedy fractional knapsack,
-SPT scheduling, and Johnson's two-machine flow shop. Back-of-registry
-module.
+SPT scheduling, and Johnson's two-machine flow shop.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-152: integer-exact 1-D Kalman local-level filtering per user
 series and a PID controller over the daily error signal.
-Back-of-registry module.
 """
 
 from __future__ import annotations

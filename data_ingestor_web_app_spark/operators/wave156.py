@@ -1,5 +1,5 @@
 """Wave-156: SAX symbolic series representation and a Huber M-estimator
-via unrolled IRLS. Back-of-registry module.
+via unrolled IRLS.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-157: border/periodicity detection over token arrays and a
-Z-order vs row-major locality audit. Back-of-registry module.
+Z-order vs row-major locality audit.
 """
 
 from __future__ import annotations

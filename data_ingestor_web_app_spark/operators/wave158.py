@@ -1,6 +1,5 @@
 """Wave-158: connected components (min-label propagation) and label
 propagation community detection on the co-purchase graph.
-Back-of-registry module.
 """
 
 from __future__ import annotations

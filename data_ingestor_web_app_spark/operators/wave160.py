@@ -1,6 +1,6 @@
 """Wave-160: exact-replayable distributed sketches — KMV distinct
 estimation, AMS F2 (join-size) estimation, and Bloom-filter membership
-with a false-positive audit. Back-of-registry module.
+with a false-positive audit.
 
 The built-in sketch aggregates (approx_count_distinct / count_min_sketch /
 hll_sketch_agg) are rows-only checkable because their binary states are

@@ -1,6 +1,5 @@
 """Wave-161: link prediction on the co-purchase graph — common
 neighbors, Adamic-Adar, and neighborhood Jaccard for NON-adjacent pairs.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-162: exact-arithmetic inference — Fisher's exact test on integer
 binomials, Cornish-Fisher moment quantiles, and the Durbin-Watson serial-
-correlation statistic. Back-of-registry module.
+correlation statistic.
 """
 
 from __future__ import annotations

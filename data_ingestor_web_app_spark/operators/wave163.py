@@ -1,6 +1,5 @@
 """Wave-163: closed-form estimation — two-feature ridge regression,
 M/M/1 queue metrics, and the jackknife for a ratio estimator.
-Back-of-registry module.
 """
 
 from __future__ import annotations

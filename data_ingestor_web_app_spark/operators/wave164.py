@@ -1,6 +1,5 @@
 """Wave-164: Katz centrality on exact walk counts, Allen's interval
 algebra over activity spans, and a Hoeffding-bound holdout audit.
-Back-of-registry module.
 """
 
 from __future__ import annotations

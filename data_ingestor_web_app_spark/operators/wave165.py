@@ -1,6 +1,6 @@
 """Wave-165: adoption-curve econometrics — Bass diffusion via its exact
 discrete linearization, logistic growth via log-linearization, and the
-Schnabel multi-sample population estimate. Back-of-registry module.
+Schnabel multi-sample population estimate.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-166: optimization and robust location — a 2-variable LP solved by
 vertex enumeration, the Weiszfeld geometric median (2 fixed iterations),
-and a Gumbel extreme-value fit from L-moments. Back-of-registry module.
+and a Gumbel extreme-value fit from L-moments.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-168: gaps-and-islands activity runs, Nelson-Aalen cumulative
 hazard, and deterministic stratified k-fold assignment.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-170: partition quality and normality testing — conductance of
 the brand partition on the co-purchase graph, and the Jarque-Bera
-normality test. Back-of-registry module.
+normality test.
 """
 
 from __future__ import annotations

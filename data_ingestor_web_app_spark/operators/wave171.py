@@ -1,5 +1,4 @@
 """Wave-171: regression discontinuity and equivalence testing (TOST).
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-172: warehouse classics — ABC-XYZ inventory classification, SCD
 Type 3 previous-value dimensions, and the price-volume-mix revenue
-bridge. Back-of-registry module.
+bridge.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-173: classifier evaluation and ordinal association — MCC/F1
 suite, precision-recall curve with average precision, and Somers' D.
-Back-of-registry module.
 """
 
 from __future__ import annotations

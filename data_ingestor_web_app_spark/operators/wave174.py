@@ -1,6 +1,5 @@
 """Wave-174: inter-rater agreement (Krippendorff's alpha), Markov-chain
 entropy rate, and association-rule quality metrics.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
 """Wave-177: primary-key uniqueness audit across the warehouse.
-Back-of-registry module (query #700).
 """
 
 from __future__ import annotations

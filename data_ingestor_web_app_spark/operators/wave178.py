@@ -7,8 +7,6 @@ way wave-159 promoted MinHash-LSH: the built-in ``count_min_sketch`` stays
 twin replays the identical d x w counter algebra with a Carter-Wegman
 mod-(2^61-1) hash family over md5 60-bit digests — pure integer arithmetic
 both engines, every counter and every estimate bit-identical.
-
-Back-of-registry module (keeps the round-6 driver window intact).
 """
 
 from __future__ import annotations
@@ -19,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestor_web_app_spark.io import table
+from data_ingestor_web_app_spark.llm import vector_extra  # noqa: F401  registers dedup_clusters
 from data_ingestor_web_app_spark.registry import ORACLES, query
 
 # Carter-Wegman family, same construction as llm/wave159.py (md5 exists in

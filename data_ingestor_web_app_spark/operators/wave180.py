@@ -1,5 +1,5 @@
 """Wave-180: 3-hop harmonic centrality on the co-purchase graph.
-Back-of-registry module (edge set shared with wave-158's components).
+Its edge set is shared with wave-158's components.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 interval scheduling and 0/1 knapsack. Each key's DP runs as ONE
 array-state fold inside its partition (the engine-wide ordered-fold
 pattern), with DuckDB recursive-CTE twins carrying the identical DP
-table so every cell is hash-verified. Back-of-registry module.
+table so every cell is hash-verified.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-185: Shapiro-Francia normality, Wilson lower-bound ranking, and
-factless coverage audit. Back-of-registry module.
+factless coverage audit.
 
 Shapiro-Francia needs the expected normal order statistics (Blom scores)
 Phi^{-1}((i - 3/8)/(n + 1/4)); there is no inverse-normal in either SQL

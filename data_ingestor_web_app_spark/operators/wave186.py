@@ -1,6 +1,6 @@
 """Wave-186: Wilcoxon signed-rank (paired), language-distribution
 divergence suite (KL/JS/Hellinger/TV), and a linear-time polynomial-kernel
-MMD over embeddings. Back-of-registry module.
+MMD over embeddings.
 
 The MMD is the scale headline: the naive two-sample MMD is O(N*M) pairwise
 kernel evaluations, but for the polynomial kernel k(x,y) = (x.y/d + 1)^2

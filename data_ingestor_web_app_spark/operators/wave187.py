@@ -1,5 +1,5 @@
 """Wave-187: Pettitt changepoint, Bartlett variance homogeneity, and a
-tie-corrected Jonckheere-Terpstra ordered-trend test. Back-of-registry.
+tie-corrected Jonckheere-Terpstra ordered-trend test.
 
 All three are rank/moment statistics whose naive forms are pairwise
 (Pettitt and JT are U-statistics over O(N^2) pairs); each is re-expressed

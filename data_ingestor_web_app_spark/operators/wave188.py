@@ -1,5 +1,5 @@
 """Wave-188: Lilliefors normality (fitted-parameter KS), Mood's median
-test, and the turning-point randomness test. Back-of-registry module.
+test, and the turning-point randomness test.
 
 Lilliefors needs the standard normal CDF, which neither engine has as a
 builtin; Phi is expressed through the Abramowitz-Stegun 26.2.17 rational

@@ -1,6 +1,6 @@
 """Wave-189: consistent-hash shard assignment with a re-shard movement
 audit, Theil's uncertainty coefficient, and weekend odds ratios with
-Woolf confidence intervals. Back-of-registry module.
+Woolf confidence intervals.
 
 The consistent-hash ring is built in Python from md5 (public, identical
 in hashlib / Spark / DuckDB) and injected as sorted literal arrays into

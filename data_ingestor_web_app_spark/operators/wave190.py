@@ -1,5 +1,5 @@
 """Wave-190: Heaps'-law vocabulary-growth fit, code-likeness detection,
-and a regex-free non-ASCII audit. Back-of-registry module.
+and a regex-free non-ASCII audit.
 
 Heaps' law (V = K * W^beta) is the canonical corpus-growth diagnostic; a
 naive fit needs the running distinct-vocabulary curve, which is a

@@ -1,5 +1,5 @@
 """Wave-191: Yule's K + Simpson diversity, Juilland's dispersion for the
-top tokens, and a grouped-Lorenz token-frequency Gini. Back-of-registry.
+top tokens, and a grouped-Lorenz token-frequency Gini.
 
 All three are vocabulary-distribution diagnostics built so that every
 intermediate is an exact integer: K and Simpson come from the frequency

@@ -1,7 +1,7 @@
 """Wave-192: duplicate-paragraph removal (C4-style keep-first chunk
 dedup), integer-exact systematic weighted sampling via a distributed
 two-phase prefix sum, and the Cochran-Armitage trend test for ordered
-binomial proportions. Back-of-registry module.
+binomial proportions.
 
 All three are exact: chunk dedup keys on the chunk string itself with a
 (doc_id, chunk_idx) total order; the systematic sampler does every

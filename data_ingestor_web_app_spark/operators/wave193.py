@@ -1,6 +1,5 @@
 """Wave-193: Page's L test for ordered alternatives, the Lepage combined
 location-scale two-sample test, and Base58 short-key encoding.
-Back-of-registry module.
 
 Page's L is the ordered-alternative companion to the existing
 agg_friedman_test (Friedman asks "any difference between treatments?";

@@ -1,6 +1,6 @@
 """Wave-194: cluster-validity metrics over the embeddings table —
 simplified (centroid) silhouette per cluster, and the Calinski-Harabasz
-/ Davies-Bouldin indices. Back-of-registry module.
+/ Davies-Bouldin indices.
 
 The evaluation side of the existing clustering stack (sim_kmeans_iter,
 dedup_clusters, sim_ivf_*): given an assignment (the fixture's `label`),

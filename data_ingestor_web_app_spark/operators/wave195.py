@@ -1,5 +1,5 @@
 """Wave-195: Hopkins clustering-tendency statistic with derandomized
-uniform probes, and the centroid-diameter Dunn index. Back-of-registry.
+uniform probes, and the centroid-diameter Dunn index.
 
 Hopkins answers the question the wave-194 validity indices assume away:
 is there ANY cluster structure to score, or is the embedding cloud

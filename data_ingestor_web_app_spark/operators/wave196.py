@@ -1,7 +1,6 @@
 """Wave-196: training-feature preparation — calendar-exact lag/rolling
 features per user, leave-one-out smoothed target encoding — plus the
 per-node local clustering coefficient on the co-purchase graph.
-Back-of-registry module.
 
 Lag features use integer day indices and RANGE window frames, so "7 days
 ago" means calendar days (a gap-aware lag), not "7 rows ago"; all values

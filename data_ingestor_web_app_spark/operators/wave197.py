@@ -1,6 +1,5 @@
 """Wave-197: MIPS-to-L2 augmented-vector reduction, bivariate
 Mahalanobis outlier days, and a 3-round generalized-ESD extreme peeler.
-Back-of-registry module.
 
 The MIPS query materializes the classic Bachrach/Shrivastava trick —
 append sqrt(M^2 - ||x||^2) so maximum-inner-product search becomes

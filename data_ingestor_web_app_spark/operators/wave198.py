@@ -1,6 +1,6 @@
 """Wave-198: Atkinson inequality indices, Box-Cox lambda grid search by
 profile log-likelihood, and churn-label construction for supervised
-training. Back-of-registry module.
+training.
 
 Atkinson complements the Gini/Lorenz/Theil family with the one
 inequality index that has an explicit social-welfare parameter (the two

@@ -1,6 +1,6 @@
 """Wave-199: duplicate-5-gram character coverage (the RefinedWeb
 repetition filter), reciprocal-rank fusion of two retrieval rankings,
-and closed-form business-day counts. Back-of-registry module.
+and closed-form business-day counts.
 
 The dup-ngram coverage metric is the exact character-span union the
 RefinedWeb/MassiveText pipelines compute: what FRACTION of a document's

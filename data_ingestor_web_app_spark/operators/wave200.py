@@ -1,5 +1,5 @@
 """Wave-200: bucketed Local Outlier Factor over the embeddings, and the
-Hoover (Robin Hood) inequality index. Back-of-registry module.
+Hoover (Robin Hood) inequality index.
 
 LOF is the standard density-based anomaly score for vector corpora —
 points whose local density is much lower than their neighbors'. The

@@ -1,7 +1,7 @@
 """Wave-201: clustering-agreement metrics (ARI / Fowlkes-Mallows /
 purity and NMI / V-measure) between the embedding labels and a
 derandomized 3-plane LSH partition, plus a sequential quality-filter
-funnel with per-rule attrition. Back-of-registry module.
+funnel with per-rule attrition.
 
 The agreement pair answers "does my cheap LSH partition recover the real
 clusters?" — the exact question before trusting bucket-local ops

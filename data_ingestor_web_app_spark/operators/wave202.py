@@ -1,6 +1,6 @@
 """Wave-202: per-dimension embedding health statistics (the dead/dominant
 dimension audit) and the WAPE / sMAPE / MASE forecast-evaluation suite
-against a seasonal-naive baseline. Back-of-registry module.
+against a seasonal-naive baseline.
 
 Dimension stats are the standard pre-flight check before
 whitening/quantizing an embedding corpus: a dimension with ~zero

@@ -1,7 +1,7 @@
 """Wave-203: Goodman-Kruskal gamma and lambda — the ordinal
 concordance and nominal proportional-reduction-in-error association
 measures missing from the contingency family (Cramér's V, Theil's U,
-Somers' D, Kendall tau are already registered). Back-of-registry.
+Somers' D, Kendall tau are already registered).
 
 Both reduce to exact integer pair/max counting on a small contingency
 table, so the only double is the final ratio.

@@ -1,6 +1,5 @@
 """Wave-204: segmented (broken-stick) regression with closed-form
 breakpoint grid search, and deterministic ULID key generation.
-Back-of-registry module.
 
 Segmented regression fits the actual two-regime trend that the
 changepoint TESTS in the registry (Pettitt, CUSUM, Page-Hinkley) only

@@ -1,6 +1,6 @@
 """Wave-205: cohort LTV curves (cumulative revenue per user by signup
 cohort and age) and tokenizer fertility profiling (whitespace vs
-subword-proxy token counts per language). Back-of-registry module.
+subword-proxy token counts per language).
 
 LTV-by-cohort is the one retention artifact the events family still
 lacked (funnel, retention matrix, churn labels, RFM are registered);

@@ -1,6 +1,5 @@
 """Wave-206: item-item collaborative filtering (co-rater cosine) and the
 Slope One rating-deviation model over the customer x part basket matrix.
-Back-of-registry module.
 
 The registry's recsys coverage stopped at ALS half-steps and association
 rules; these add the two classic memory-based recommenders. Both build

@@ -1,6 +1,6 @@
 """Wave-207: return-series risk metrics (Sharpe, Sortino, empirical
 VaR/CVaR) and the partial autocorrelation function to lag 3 via
-Durbin-Levinson closed forms. Back-of-registry module.
+Durbin-Levinson closed forms.
 
 Completes the series-diagnostics family (ACF, Hurst, DFA, drawdown are
 registered): PACF is what actually picks an AR order, and the risk

@@ -1,5 +1,5 @@
 """Wave-208: personalized PageRank from a seed node (unrolled power
-iteration with restart). Back-of-registry module.
+iteration with restart).
 
 graph_pagerank_unrolled scores GLOBAL importance; PPR answers the
 node-centric question — "which parts co-matter from THIS part's point of

@@ -1,7 +1,6 @@
 """Wave-209: Seasonal-Hybrid ESD anomaly detection (Twitter's
 AnomalyDetection algorithm, simplified to the median-seasonal form) and
 exact per-row SHAP attributions for the closed-form two-feature OLS.
-Back-of-registry module.
 
 S-H-ESD composes two registered primitives — robust seasonal removal
 and generalized-ESD peeling — into the industry-standard "find the

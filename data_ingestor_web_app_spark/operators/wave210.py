@@ -1,6 +1,6 @@
 """Wave-210: Engle-Granger two-step cointegration test between the
 daily count and spend series, and an anisotropy audit of the embedding
-cloud. Back-of-registry module.
+cloud.
 
 Cointegration answers what correlation can't: two trending series can
 correlate spuriously, but only a cointegrated pair has a stationary

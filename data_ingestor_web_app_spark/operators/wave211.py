@@ -1,6 +1,6 @@
 """Wave-211: TwoNN intrinsic-dimension estimator for the embedding
 corpus (cell-local, exact-integer distances) and the Chow structural-
-break F-test at a fixed breakpoint. Back-of-registry module.
+break F-test at a fixed breakpoint.
 
 TwoNN (Facco et al. 2017) estimates the manifold dimension from nothing
 but each point's two nearest-neighbor distances: mu_i = r2/r1 follows a

@@ -1,6 +1,6 @@
 """Wave-212: derandomized SMOTE oversampling for the minority embedding
 cluster, and classic safety-stock / reorder-point planning from daily
-demand. Back-of-registry module.
+demand.
 
 SMOTE (Chawla et al. 2002) is the standard imbalanced-learning fix:
 synthesize minority-class points by interpolating toward same-class

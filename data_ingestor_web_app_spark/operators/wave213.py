@@ -1,6 +1,6 @@
 """Wave-213: sampled eccentricity / diameter bounds via multi-source
 unrolled BFS on the co-purchase graph, and the G-test of independence
-(the log-likelihood-ratio chi-square). Back-of-registry module.
+(the log-likelihood-ratio chi-square).
 
 Eccentricity from a handful of md5-chosen sources is the standard cheap
 diameter probe (max observed eccentricity lower-bounds the diameter; the

@@ -1,6 +1,6 @@
 """Wave-214: exact LAD (least-absolute-deviations) regression via
 support-pair enumeration, and the rank-based confidence interval for
-the Theil-Sen slope. Back-of-registry module.
+the Theil-Sen slope.
 
 The robust-line family (Theil-Sen point estimate, Huber, RANSAC) lacked
 two things: the actual L1-OPTIMAL line, and an uncertainty statement.

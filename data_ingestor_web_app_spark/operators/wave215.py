@@ -1,5 +1,5 @@
 """Wave-215: competing-risks cumulative incidence (Aalen-Johansen for
-two terminal causes) and the Verhoeff check digit. Back-of-registry.
+two terminal causes) and the Verhoeff check digit.
 
 Kaplan-Meier (registered) treats every exit as one kind of event; with
 COMPETING terminal causes (here: does a user's first terminal action

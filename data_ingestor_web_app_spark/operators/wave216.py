@@ -1,5 +1,5 @@
 """Wave-216: exact Shapley data valuation for vocabulary coverage, and
-the greedy set-cover ordering of sources. Back-of-registry module.
+the greedy set-cover ordering of sources.
 
 Data-valuation (Ghorbani & Zou's Data Shapley, here with the coverage
 utility): how much of the corpus vocabulary does each SOURCE uniquely

@@ -1,7 +1,6 @@
 """Wave-217: KMV (theta-sketch) SET OPERATIONS — union / intersection /
 Jaccard estimates between two user populations from k-minimum-value
 sketches — and Spark's parameterized SQL binding surface.
-Back-of-registry module.
 
 The sketch family (HLL, KMV distinct, count-min, Bloom, space-saving)
 covered single-set cardinality; theta-style KMV sketches are the one

@@ -1,5 +1,5 @@
 """Wave-218: doubly-robust (AIPW) average-treatment-effect estimation
-and the Quade test for weighted within-block ranks. Back-of-registry.
+and the Quade test for weighted within-block ranks.
 
 AIPW closes the causal family (CUPED uplift, propensity matching,
 diff-in-diff, RDD are registered): it combines a propensity model and

@@ -1,6 +1,5 @@
 """Wave-219: Hu moment invariants over the real PNG decode path, and
 IPS / SNIPS off-policy evaluation of a counterfactual action policy.
-Back-of-registry module.
 
 Hu's invariants (1962) are the classic translation-invariant shape
 signature — the multimodal family has histograms/SSIM/pHash/GLCM but no

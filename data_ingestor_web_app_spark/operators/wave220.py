@@ -1,6 +1,5 @@
 """Wave-220: paired t-test on weekday-matched week pairs, and the
 Nemenyi critical-difference post-hoc after Friedman.
-Back-of-registry module.
 
 The paired t is the one classical location test still missing (Welch,
 Mann-Whitney, Wilcoxon signed-rank, Mood are registered): pairing

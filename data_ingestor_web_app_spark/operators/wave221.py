@@ -1,5 +1,4 @@
 """Wave-221: Tukey-Kramer HSD post-hoc after one-way ANOVA.
-Back-of-registry module.
 
 agg_anova_oneway says the event-type spend means differ SOMEWHERE;
 Tukey-Kramer is the standard parametric answer to WHERE, with the

@@ -1,6 +1,6 @@
 """Wave-222: the Cressie-Read power-divergence family on one
 contingency table — Pearson X^2, the G statistic, and Freeman-Tukey —
-computed side by side. Back-of-registry module.
+computed side by side.
 
 Pearson (lambda=1), likelihood-ratio G (lambda->0) and Freeman-Tukey
 (lambda=-1/2) are all members of one family; their DISAGREEMENT is the

@@ -1,5 +1,5 @@
 """Wave-223: Anderson-Darling normality test and the Fisher-z
-confidence interval for a Pearson correlation. Back-of-registry module.
+confidence interval for a Pearson correlation.
 
 Anderson-Darling is the most powerful of the classical omnibus
 normality tests in the tails — exactly where Shapiro-Francia and

@@ -1,6 +1,6 @@
 """Wave-224: OLS influence diagnostics (leverage, studentized residuals,
 Cook's distance) and design-matrix health (VIF and the closed-form 2x2
-condition number). Back-of-registry module.
+condition number).
 
 The regression family (OLS, ridge, Theil-Sen, LAD, RANSAC, segmented,
 Chow, Breusch-Pagan, Durbin-Watson) fits lines but never asked WHICH

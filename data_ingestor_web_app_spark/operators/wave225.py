@@ -1,6 +1,5 @@
 """Wave-225: Erlang-B blocking probabilities across a channel-count
 sweep, and DKW confidence bands around the empirical CDF.
-Back-of-registry module.
 
 Erlang B is the loss-system companion to the registered M/M/1 and
 Erlang-C queueing ops: calls that find all k channels busy are DROPPED

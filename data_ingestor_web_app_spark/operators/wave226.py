@@ -1,5 +1,5 @@
 """Wave-226: Mantel-Haenszel pooled odds ratio with the CMH chi-square,
-and Excel serial-date conversion. Back-of-registry module.
+and Excel serial-date conversion.
 
 Wave-189's Woolf machinery gives PER-STRATUM odds ratios; Mantel-
 Haenszel is the standard way to POOL them across confounding strata

@@ -1,6 +1,5 @@
 """Wave-227: AIC/BIC model selection across the trend-model ladder
 (constant, linear, broken-stick) with the BIC-approximate Bayes factor.
-Back-of-registry module.
 
 The regression family fits many models but never scores them against
 each other; AIC/BIC is the standard ladder ranking, and exp(dBIC/2) is

@@ -1,5 +1,5 @@
 """Wave-228: Poisson rate-ratio test (week-over-week traffic change)
-and the Hosmer-Lemeshow grouped calibration test. Back-of-registry.
+and the Hosmer-Lemeshow grouped calibration test.
 
 The rate-ratio test is the "did volume actually change" primitive: two
 Poisson counts compared via the exact conditional-binomial device (given

@@ -1,7 +1,6 @@
 """Wave-229: columnar-encoding engineering audits — delta+zigzag+varint
 cost, Morton (Z-curve) bit interleaving with self-inverse proof, and an
 RLE/delta run audit on the sort order a parquet writer would use.
-Back-of-registry.
 
 These are the layout decisions a 100 TB lakehouse makes per column: how
 many bytes does delta+varint actually buy on a clustered key, is the

@@ -3,7 +3,7 @@ with pointer jumping, checked against an analytic gaps-and-islands
 oracle), dedup survivorship (canonical-record pick per duplicate
 cluster), and Expected Reciprocal Rank over graded retrieval — computed
 in exact dyadic arithmetic so the cascade product is bit-identical in
-any IEEE engine. Back-of-registry.
+any IEEE engine.
 """
 
 from __future__ import annotations

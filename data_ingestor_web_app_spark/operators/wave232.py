@@ -1,6 +1,6 @@
 """Wave-232: Fellegi-Sunter record-linkage scoring, year-over-year /
 month-over-month growth from calendar rollups, and a source-interleaved
-training-order schedule computed without a global sort. Back-of-registry.
+training-order schedule computed without a global sort.
 """
 
 from __future__ import annotations

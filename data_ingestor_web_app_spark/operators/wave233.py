@@ -1,6 +1,6 @@
 """Wave-233: 4-4-5 fiscal-calendar rollup (retail reporting calendar via
 pure integer date arithmetic) and Benjamini-Hochberg FDR control with a
-Storey pi0 estimate over hour-of-day effect tests. Back-of-registry.
+Storey pi0 estimate over hour-of-day effect tests.
 """
 
 from __future__ import annotations

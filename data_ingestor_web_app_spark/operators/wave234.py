@@ -2,7 +2,7 @@
 Getis-Ord Gi* (local hot spots) over an hour-of-day x day-of-week activity
 grid. The classic ESDA pair a telemetry platform runs before claiming "the
 Tuesday 3am cells are anomalous": Moran's I says WHETHER values cluster in
-grid space at all; Gi* says WHERE. Back-of-registry.
+grid space at all; Gi* says WHERE.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-235: time-series diagnostics a metrics platform runs on its own
 telemetry — the Lo-MacKinlay variance-ratio random-walk test, Engle's
 ARCH LM heteroskedasticity test, and a 24 h cosinor (circadian rhythm)
-regression. Back-of-registry.
+regression.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-236: ordinal-pattern analysis (Bandt-Pompe permutation entropy)
 and the Lomb-Scargle periodogram for UNEVENLY sampled series — the two
 complexity/periodicity tools that work where FFT-style methods need a
-regular grid. Back-of-registry.
+regular grid.
 """
 
 from __future__ import annotations

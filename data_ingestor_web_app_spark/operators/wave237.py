@@ -3,7 +3,7 @@ correlation, Bland-Altman limits of agreement, and Deming regression — on
 the naturally paired measurements TPC-H ships: an order's header total
 (o_totalprice, tax- and discount-adjusted) vs the sum of its raw lineitem
 extended prices. Two instruments measuring the same quantity, which is
-exactly the setting these statistics were built for. Back-of-registry.
+exactly the setting these statistics were built for.
 """
 
 from __future__ import annotations

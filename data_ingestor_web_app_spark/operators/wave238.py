@@ -3,7 +3,7 @@ Efron-Morris shrunk group means, iterative proportional fitting (raking)
 with two unrolled sweeps, and the Newey-West HAC long-run variance. The
 three tools that turn raw slice means into publishable ones: shrink the
 noisy slices, rake to known margins, widen the error bars for serial
-correlation. Back-of-registry.
+correlation.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 Brunner-Munzel test (the heteroskedasticity-robust replacement for
 Mann-Whitney) and the Ansari-Bradley dispersion test. Both operate on
 the 'view' vs 'click' value samples like agg_mann_whitney, sharing its
-scalable groupBy-value midrank device (wave30.py:287). Back-of-registry.
+scalable groupBy-value midrank device (wave30.py:287).
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 graph (same edge device as graph_triangle_count, dq.py:138 — users
 linked by shared (event_type, minute) activity buckets): the rich-club
 coefficient ladder, directed-edge reciprocity, and the Molloy-Reed
-percolation criterion. Back-of-registry.
+percolation criterion.
 """
 
 from __future__ import annotations

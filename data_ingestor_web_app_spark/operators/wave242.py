@@ -2,7 +2,7 @@
 (the wave-87 GLCM device — Arrow-batched mapInPandas decode on the Spark
 side, closed-form pixel algebra in the oracle): local binary patterns
 with the uniform-code fraction, and the JPEG-style block DC/AC energy
-split computed exactly via Parseval. Back-of-registry.
+split computed exactly via Parseval.
 """
 
 from __future__ import annotations

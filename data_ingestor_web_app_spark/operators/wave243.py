@@ -1,7 +1,7 @@
 """Wave-243: classical model fits with closed forms — Fisher's linear
 discriminant (2 features, 2x2 inverse), the Cox proportional-hazards
 score test / one-step estimator at beta=0 over risk sets (Breslow ties),
-and binned Sobol first-order sensitivity indices. Back-of-registry.
+and binned Sobol first-order sensitivity indices.
 """
 
 from __future__ import annotations

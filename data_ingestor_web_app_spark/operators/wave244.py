@@ -2,7 +2,7 @@
 Counting distinct sketch (the low-cardinality regime where HLL is biased)
 and the differentially-private exponential mechanism selected via the
 Gumbel-max trick, both on the md5-uniform device of
-privacy_dp_laplace_hashnoise (wave60.py:106). Back-of-registry.
+privacy_dp_laplace_hashnoise (wave60.py:106).
 """
 
 from __future__ import annotations

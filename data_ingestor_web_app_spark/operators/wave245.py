@@ -1,7 +1,7 @@
 """Wave-245: renewal/queueing analytics beyond M/M/1 — the M/G/1
 Pollaczek-Khinchine mean waiting time from EMPIRICAL service moments
 (no exponential-service assumption), and the inspection-paradox audit
-quantifying length-biased sampling of inter-event gaps. Back-of-registry.
+quantifying length-biased sampling of inter-event gaps.
 """
 
 from __future__ import annotations

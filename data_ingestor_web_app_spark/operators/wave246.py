@@ -1,7 +1,7 @@
 """Wave-246: second-order time-series structure — the CUSUM-of-squares
 variance-changepoint test (Inclán-Tiao ICSS core) and detrended
 cross-correlation analysis (DCCA) between the hourly value level and the
-hourly event volume. Back-of-registry.
+hourly event volume.
 """
 
 from __future__ import annotations

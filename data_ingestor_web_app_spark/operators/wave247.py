@@ -1,6 +1,6 @@
 """Wave-247: the seasonal Mann-Kendall trend test (trend detection that
 survives a daily cycle) and the Clauset-Shalizi-Newman power-law MLE on
-the co-occurrence graph's degree distribution. Back-of-registry.
+the co-occurrence graph's degree distribution.
 """
 
 from __future__ import annotations

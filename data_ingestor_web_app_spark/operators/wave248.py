@@ -2,7 +2,7 @@
 paths — order-2 linear predictive coding (Levinson-Durbin on exact
 integer autocorrelations) per decoded WAV, and the projection-profile
 analysis (row/column intensity sums, the classic document-skew /
-layout screen) per decoded PNG. Back-of-registry.
+layout screen) per decoded PNG.
 """
 
 from __future__ import annotations

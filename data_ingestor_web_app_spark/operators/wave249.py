@@ -2,7 +2,7 @@
 k-sample Anderson-Darling test (with its exact finite-N standardization,
 including the double-harmonic g computed in O(N) from prefix sums) and
 the Conover squared-ranks scale test with a median center. Both compare
-the event-type groups of `value`. Back-of-registry.
+the event-type groups of `value`.
 """
 
 from __future__ import annotations

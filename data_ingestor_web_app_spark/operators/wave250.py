@@ -2,7 +2,6 @@
 step of Poisson regression (log link) from the null fit, and the
 Kaplan-Meier curve with Greenwood variance / confidence bands on the
 time-to-conversion framing (where this data has real events).
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -3,7 +3,6 @@ audit that cross-checks Spark's soundex BUILTIN against a from-spec SQL
 replay (American Soundex with the NARA H/W-transparency rule), and the
 second-digit Benford test (the digit forensic auditors actually use,
 because invented numbers fail it even when first digits are padded).
-Back-of-registry.
 """
 
 from __future__ import annotations

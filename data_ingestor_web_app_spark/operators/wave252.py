@@ -1,7 +1,7 @@
 """Wave-252: bounded-radius k-nearest-neighbor join via grid blocking
 (the join_spatial_grid device extended from radius-join to kNN), and the
 LIFO/FIFO cost-allocation comparison with the LIFO reserve (extending
-warehouse_fifo_cogs' window allocator, wave181.py:20). Back-of-registry.
+warehouse_fifo_cogs' window allocator, wave181.py:20).
 """
 
 from __future__ import annotations

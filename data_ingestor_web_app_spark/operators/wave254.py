@@ -1,7 +1,7 @@
 """Wave-254: circular statistics beyond the basics — Watson's U^2
 uniformity test on the 24 h clock (rotation-invariant, unlike a KS on
 wrapped times) and the Fisher-Lee circular-circular correlation between
-users' click-time and purchase-time angles. Back-of-registry.
+users' click-time and purchase-time angles.
 """
 
 from __future__ import annotations

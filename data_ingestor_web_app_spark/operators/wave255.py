@@ -2,7 +2,7 @@
 normalized onto one timeline of elementary intervals — Snodgrass'
 "temporal join" building block that interval_overlap/coalesce don't
 cover), and Spiegelhalter's calibration z-test on the wave-63 logistic
-scorer. Back-of-registry.
+scorer.
 """
 
 from __future__ import annotations

@@ -2,7 +2,6 @@
 runs test (sensitive to ANY distributional difference, not just
 location/scale) and Hoeffding's D measure of general bivariate
 dependence (catches what correlation can't: non-monotone association).
-Back-of-registry.
 """
 
 from __future__ import annotations

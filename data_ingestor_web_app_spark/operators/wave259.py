@@ -3,7 +3,6 @@ weights forecaster replayed in CLOSED FORM over the daily series with
 its regret bound checked in-band, and Gwet's AC1 agreement coefficient
 (the paradox-resistant alternative to Cohen's kappa, on the same two
 heuristic raters as pipeline_cohens_kappa, wave72.py:20).
-Back-of-registry.
 """
 
 from __future__ import annotations

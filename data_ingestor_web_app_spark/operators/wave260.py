@@ -3,7 +3,6 @@ Diebold-Mariano test (HAC-corrected, reusing agg_newey_west's Bartlett
 machinery) and Fisher's exact paired randomization test with
 derandomized md5 sign flips. Both compare the persistence and seasonal
 experts from opt_hedge_regret on the same daily series.
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-261: classical forecasting completion — the Theta method (the
 M3-competition winner) as a closed-form window computation, and the
 Kolmogorov-Zurbenko kz(5,3) iterated-moving-average filter.
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 as an incidence curve — the Cori instantaneous reproduction number R_t
 (the EpiEstim estimator) with a literal serial-interval kernel, and the
 early exponential growth rate with doubling time and the SIR-implied
-R0. Back-of-registry.
+R0.
 """
 
 from __future__ import annotations

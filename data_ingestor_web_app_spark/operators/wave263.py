@@ -2,7 +2,7 @@
 Sobel test (three closed-form OLS fits from one moment pass) on the
 discount -> quantity -> revenue chain, and time-decay multi-touch
 attribution (the exponential-half-life credit rule that completes the
-last-touch / position / Markov / Shapley family). Back-of-registry.
+last-touch / position / Markov / Shapley family).
 """
 
 from __future__ import annotations

@@ -2,7 +2,6 @@
 (relative risk, risk difference, NNT, Katz log-RR confidence interval;
 the absolute-scale companions to agg_odds_ratio_woolf) and the Kupiec
 proportion-of-failures backtest for a historical VaR estimate.
-Back-of-registry.
 """
 
 from __future__ import annotations

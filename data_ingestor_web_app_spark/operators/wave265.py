@@ -2,7 +2,6 @@
 design effect and effective sample size over the wave-238 raking
 weights, and the extremal index via runs declustering (how much the
 tail CLUSTERS, i.e. how many of my extremes are really one incident).
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-267: Oaxaca-Blinder decomposition of a between-group mean gap
 into endowments / coefficients / interaction — the econometric
 accounting identity behind every pay-gap and conversion-gap study.
-Back-of-registry.
 """
 
 from __future__ import annotations

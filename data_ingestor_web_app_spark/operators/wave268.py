@@ -1,7 +1,7 @@
 """Wave-268: index-number theory and forecast rationality — the
 Laspeyres / Paasche / Fisher price indices between the two halves of
 the order history, and the Mincer-Zarnowitz regression test (is the
-persistence forecast unbiased AND efficient?). Back-of-registry.
+persistence forecast unbiased AND efficient?).
 """
 
 from __future__ import annotations

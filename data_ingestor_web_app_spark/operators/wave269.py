@@ -1,7 +1,7 @@
 """Wave-269: psychometrics and survey planning — KR-20 reliability with
 per-item point-biserial discrimination over the user x event-type
 "test", and Cochran's sample-size formula with finite-population
-correction from pilot moments. Back-of-registry.
+correction from pilot moments.
 """
 
 from __future__ import annotations

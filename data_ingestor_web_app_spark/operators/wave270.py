@@ -1,7 +1,7 @@
 """Wave-270: diversity and guessability — the Hill-numbers diversity
 profile (effective numbers at q = 0, 1, 2, inf) of the user-activity
 distribution, and the Massey guesswork / min-entropy audit of a
-quasi-identifier fingerprint. Back-of-registry.
+quasi-identifier fingerprint.
 """
 
 from __future__ import annotations

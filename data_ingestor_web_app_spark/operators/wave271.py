@@ -1,7 +1,7 @@
 """Wave-271: the Goh-Barabasi burstiness-memory plane per event type
 (the two-coordinate fingerprint of point processes) and a transitivity
 / closure audit of the near-duplicate similarity graph (how safe is
-cluster-collapse by connected components?). Back-of-registry.
+cluster-collapse by connected components?).
 """
 
 from __future__ import annotations

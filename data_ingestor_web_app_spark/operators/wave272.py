@@ -2,7 +2,6 @@
 (is per-user activity a stable trait or noise?) and the Chung-Lu
 null-model calibration of the triangle count (is the co-occurrence
 graph's clustering real, or just what its degree sequence forces?).
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-274: two more integer-exact signal descriptors on the real
 codec paths — the Euler number of the Otsu-binarized image via Gray's
 quad-pattern counts (connected components MINUS holes, no labeling
-pass), and autocorrelation pitch detection per WAV. Back-of-registry.
+pass), and autocorrelation pitch detection per WAV.
 """
 
 from __future__ import annotations

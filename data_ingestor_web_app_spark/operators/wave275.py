@@ -2,7 +2,6 @@
 function (the Lindley recursion collapses to a prefix-minimum — no
 discrete-event loop), and a concentration-inequality audit comparing
 empirical tails against Markov / Chebyshev / one-sided Cantelli bounds.
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-276: uplift-model evaluation via the Qini curve (the AUUC
 standard) and the variance-time curve (the Leland self-similarity
-diagnostic for arrival processes). Back-of-registry.
+diagnostic for arrival processes).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-277: robust estimation completion — the Tukey biweight one-step
 location estimate (the redescending counterpart to agg_huber_m_estimator)
 and the Rousseeuw-Croux Qn scale estimator (robust scale WITHOUT a
-location estimate). Back-of-registry.
+location estimate).
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-279: the cohort revenue-retention triangle (the SaaS reporting
 classic, in weekly cohorts) and a 4-round Feistel format-preserving
-pseudonymization with an in-band bijectivity audit. Back-of-registry.
+pseudonymization with an in-band bijectivity audit.
 """
 
 from __future__ import annotations

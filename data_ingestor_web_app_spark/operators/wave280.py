@@ -2,7 +2,6 @@
 model (log-log fit of cumulative failure rate) and Nelson's mean
 cumulative function for recurrent events (the recurrent-event curve
 that Kaplan-Meier, which only sees FIRST events, cannot draw).
-Back-of-registry.
 """
 
 from __future__ import annotations

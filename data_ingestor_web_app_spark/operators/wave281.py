@@ -1,7 +1,7 @@
 """Wave-281: the longest-run randomness screen (the NIST SP 800-22
 family's classic, on the above-median sign sequence) and the Gray-code
 encoding round-trip with its defining single-bit-step property (joining
-the zigzag/Morton encoding-audit family). Back-of-registry.
+the zigzag/Morton encoding-audit family).
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-282: the Bates-Granger optimal forecast combination (the 1969
 result that launched forecast ensembling) and the shorth / least median
 of squares location-scale (the 50%-breakdown mode estimator).
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-283: queueing-theory completion — departure-process statistics
 from the exact Lindley replay (does the queue SMOOTH the traffic? the
 empirical cousin of Burke's theorem) and the Jackson tandem-network
-product-form metrics. Back-of-registry.
+product-form metrics.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 the CRPS of the two-forecaster ensemble (the proper score for
 probabilistic forecasts, in its exact empirical closed form) and Renyi
 record statistics (the expected number of record highs is the harmonic
-number, NO MATTER the distribution). Back-of-registry.
+number, NO MATTER the distribution).
 """
 
 from __future__ import annotations

@@ -2,7 +2,6 @@
 planner (how many shuffle partitions / output files should THIS table
 use at k x scale, from measured row widths and the 128 MiB discipline)
 — and Dixon's Q test for a single small-sample outlier.
-Back-of-registry.
 """
 
 from __future__ import annotations

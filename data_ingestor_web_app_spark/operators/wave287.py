@@ -1,7 +1,7 @@
 """Wave-287: the Weibull probability plot (median-rank regression — the
 reliability engineer's distribution screen) and triangle counting under
 md5 edge sparsification (the Tsourakakis/DOULION estimator audited
-against the exact count). Back-of-registry.
+against the exact count).
 """
 
 from __future__ import annotations

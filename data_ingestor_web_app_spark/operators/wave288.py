@@ -2,7 +2,7 @@
 the eight DTMF tone frequencies per decoded WAV, with the dominant
 row/column tone pair (how touch-tone decoding actually works, and the
 cheap "is THIS frequency present" primitive that beats a full FFT when
-you only care about a handful of bins). Back-of-registry.
+you only care about a handful of bins).
 """
 
 from __future__ import annotations

@@ -3,7 +3,6 @@ time-irreversibility statistic (does the series look the same played
 backwards? linear Gaussian processes do; crashes-vs-rallies don't) and
 one exact EM step for a two-component binomial mixture over per-user
 conversion rates (EM's monotone-likelihood property asserted in-band).
-Back-of-registry.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 the event_type x weekday layout really additive, or do effects
 multiply?) and the madogram with Gneiting's fractal-dimension estimate
 (the first-order structure function completing the Hurst/DFA/variance-
-time roughness suite). Back-of-registry.
+time roughness suite).
 """
 
 from __future__ import annotations

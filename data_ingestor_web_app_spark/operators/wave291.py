@@ -1,7 +1,7 @@
 """Wave-291: two famous structural laws — the Menzerath-Altmann law
 (longer documents use shorter words) fitted on the corpus, and Feld's
 friendship paradox (your friends have more friends than you) quantified
-per node on the co-occurrence graph. Back-of-registry.
+per node on the co-occurrence graph.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-292: Nigrini's MAD conformity verdict for Benford screening
 (the bands auditors actually quote) and the CAP / accuracy-ratio curve
-with the AR = 2*AUC - 1 identity asserted in-band. Back-of-registry.
+with the AR = 2*AUC - 1 identity asserted in-band.
 """
 
 from __future__ import annotations

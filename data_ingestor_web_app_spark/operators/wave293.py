@@ -1,7 +1,6 @@
 """Wave-293: Hamming(7,4) error correction audited end-to-end (encode,
 corrupt one md5-chosen bit, decode via syndrome, assert recovery) and
 the medcouple robust skewness (the statistic behind adjusted boxplots).
-Back-of-registry.
 """
 
 from __future__ import annotations

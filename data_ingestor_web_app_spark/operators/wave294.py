@@ -1,6 +1,5 @@
 """Wave-294: Kuiper's circular uniformity test and the Siegel-Tukey
-dispersion rank test. Back-of-registry module (appended after the r8
-driver window block so slots 1-50 stay fixed).
+dispersion rank test.
 """
 
 from __future__ import annotations

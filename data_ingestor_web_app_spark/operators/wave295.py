@@ -1,6 +1,5 @@
 """Wave-295: Epps-Pulley (BHEP) normality statistic on daily volumes and
-Chauvenet's outlier criterion with a fixed-polynomial erfc. Back-of-registry
-module.
+Chauvenet's outlier criterion with a fixed-polynomial erfc.
 """
 
 from __future__ import annotations

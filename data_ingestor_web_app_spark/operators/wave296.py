@@ -1,5 +1,5 @@
 """Wave-296: D'Agostino-Pearson K² normality omnibus and LIX/RIX
-readability. Back-of-registry module.
+readability.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-298: Bowker's symmetry test on per-user first->last event-type
-transitions and the Tsallis q-entropy ladder. Back-of-registry module.
+transitions and the Tsallis q-entropy ladder.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-299: Blomqvist's medial correlation and the turning-point test of
-randomness. Back-of-registry module.
+randomness.
 """
 
 from __future__ import annotations

@@ -7,8 +7,7 @@ two-sample Kolmogorov–Smirnov and Mann–Whitney U (the nonparametric
 complements to the Welch t already shipped), lag-k autocorrelation of a
 time series, rolling correlation between two series, snapshot diff
 (added/removed/changed classification), and a 2-feature OLS fit via
-normal equations. Registered at the back of registry._MODULES — never
-inside the driver's first-50 window.
+normal equations.
 """
 
 from __future__ import annotations

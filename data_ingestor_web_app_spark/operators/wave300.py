@@ -1,5 +1,5 @@
 """Wave-300: Banzhaf voting power over the event-type weighted game and a
-Bertrand ballot-problem audit on the daily lead. Back-of-registry module.
+Bertrand ballot-problem audit on the daily lead.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-301: Geary's C (the local-contrast companion to Moran's I on the
 same hour/weekday grid) and Lotka's inverse-square productivity law.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-302: empirical semivariogram of the hourly series and the
 Hyndman-Koehler forecast-accuracy triple (MAPE/sMAPE/MASE) for the
-seasonal-naive baseline. Back-of-registry module.
+seasonal-naive baseline.
 """
 
 from __future__ import annotations

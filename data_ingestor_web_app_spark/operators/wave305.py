@@ -1,6 +1,5 @@
 """Wave-305: Kingman's VUT (G/G/1) waiting-time approximation from
 arrival/service variability and XYZ demand-variability classification.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-306: bullwhip variance-amplification ratio across the demand
 chain and the c-chart (Poisson attribute control) on daily error counts.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-307: Mack chain-ladder development triangle with ultimates and
-Dunning log-likelihood keyness per source. Back-of-registry module.
+Dunning log-likelihood keyness per source.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-309: Hartley F-max + Cochran's C variance-homogeneity screens and
-Scheffé simultaneous pairwise contrasts. Back-of-registry module.
+Scheffé simultaneous pairwise contrasts.
 """
 
 from __future__ import annotations

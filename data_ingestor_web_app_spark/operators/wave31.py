@@ -7,8 +7,6 @@ text/binaryFile), exposes Spark's native batch ``session_window``
 table-format orphan vacuum (manifest-driven file GC), and deepens the
 multimodal kernels with a real 2-D convolution (Laplacian edge energy
 over decoded PNG pixels) and PCM decimation — all with analytic oracles.
-Registered at the back of registry._MODULES — never inside the driver's
-first-50 window.
 """
 
 from __future__ import annotations

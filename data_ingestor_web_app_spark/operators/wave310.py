@@ -1,6 +1,5 @@
 """Wave-310: two-way ANOVA by Yates' unweighted means (event type ×
 weekend) and the ANOVA effect-size ladder (eta², omega², epsilon²).
-Back-of-registry module.
 """
 
 from __future__ import annotations

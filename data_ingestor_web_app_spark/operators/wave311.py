@@ -1,5 +1,5 @@
 """Wave-311: Apdex satisfaction index per event type and SLO error-budget
-burn analysis. Back-of-registry module.
+burn analysis.
 """
 
 from __future__ import annotations

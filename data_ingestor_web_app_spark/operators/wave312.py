@@ -1,5 +1,5 @@
 """Wave-312: DDSketch relative-error quantiles, with the guarantee
-audited against exact order statistics. Back-of-registry module.
+audited against exact order statistics.
 """
 
 from __future__ import annotations

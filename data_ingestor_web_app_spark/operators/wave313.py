@@ -1,5 +1,5 @@
 """Wave-313: recurrence quantification (RR, DET) and the Poincaré plot
-descriptors SD1/SD2 on the daily series. Back-of-registry module.
+descriptors SD1/SD2 on the daily series.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-314: Hawkes branching-ratio moment estimate from window counts
-and Breslau/Zipf LFU cache hit ratios. Back-of-registry module.
+and Breslau/Zipf LFU cache hit ratios.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-315: the quantile-blend robust location family (Gastwirth,
 Tukey trimean, midhinge, QCD) and the classical histogram bin-width
-rules. Back-of-registry module.
+rules.
 """
 
 from __future__ import annotations

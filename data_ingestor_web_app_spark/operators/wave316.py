@@ -1,5 +1,4 @@
 """Wave-316: round-number bunching audit and per-part price dispersion.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-318: coupon-collector completion audit and a birthday-paradox
-hash-collision check. Back-of-registry module.
+hash-collision check.
 """
 
 from __future__ import annotations

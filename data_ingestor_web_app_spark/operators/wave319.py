@@ -1,6 +1,6 @@
 """Wave-319 (registry query #1000): negative-binomial overdispersion with
 a zero-inflation audit on the hourly grid, and the Lexis ratio of daily
-proportions. Back-of-registry module.
+proportions.
 """
 
 from __future__ import annotations

@@ -7,7 +7,7 @@ sampling from the multilingual T5/mT5 papers) so a reference user's data
 curation stack maps 1:1. The relational additions close the MERGE action
 matrix (matched-update / matched-delete / not-matched-insert /
 not-matched-by-source-delete) and pin nested-struct schema pruning as a
-plan-shape guarantee. Registered at the back of registry._MODULES.
+plan-shape guarantee.
 """
 
 from __future__ import annotations

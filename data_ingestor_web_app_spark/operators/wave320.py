@@ -1,5 +1,5 @@
 """Wave-320: Cuzick's trend test across ordered groups and the paired
-sign test. Back-of-registry module.
+sign test.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-321: Schechtman-Yitzhaki Gini correlations and the robust
 skewness family (Kelly, Groeneveld-Meeden, Pearson-2).
-Back-of-registry module.
 """
 
 from __future__ import annotations

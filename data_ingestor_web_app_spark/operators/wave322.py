@@ -1,5 +1,4 @@
-"""Wave-322: Kulldorff temporal scan statistic. Back-of-registry
-module.
+"""Wave-322: Kulldorff temporal scan statistic.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-323: sequential-halving best-arm identification on the replay and
-coarsened exact matching (CEM). Back-of-registry module.
+coarsened exact matching (CEM).
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-324: the classical homogeneity screen suite (Buishand, SNHT,
 von Neumann) and Bartels' rank version of the von Neumann ratio.
-Back-of-registry module.
 """
 
 from __future__ import annotations

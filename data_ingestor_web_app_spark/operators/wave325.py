@@ -1,5 +1,5 @@
 """Wave-325: Kitagawa rate decomposition and location quotients with the
-Krugman specialization index. Back-of-registry module.
+Krugman specialization index.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-326: the 2x2 association shelf (phi, Yule's Q and Y) and the
-point-biserial correlation. Back-of-registry module.
+point-biserial correlation.
 """
 
 from __future__ import annotations

@@ -5,7 +5,6 @@ textbook quantities (Markowitz/Sharpe 1966, Sortino 1994, RiskMetrics
 1996, Appel's MACD, Jensen 1968) over the calendar-bounded 30-day
 daily frame: integer milli-sums make the daily means exact rationals,
 and every derived float is a fixed expression chain rounded 6dp.
-Back-of-registry module.
 """
 
 from __future__ import annotations

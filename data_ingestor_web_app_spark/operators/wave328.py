@@ -3,7 +3,7 @@ Sainte-Laguë), the disproportionality shelf (Gallagher least-squares,
 Loosemore–Hanby, effective number of parties), and Copeland's
 pairwise-duel rank aggregation. All public-domain electoral-systems
 classics, run with event types as 'parties' and event counts as
-'votes'. Back-of-registry module.
+'votes'.
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ the canonical 2x2 design, the instrumental-variable Wald estimator,
 and the risk-difference / NNT / E-value trio for the exposure-outcome
 table. All public textbook estimators (Card & Krueger 1994 DiD form,
 Wald 1940 / Angrist 1991 IV, Laupacis 1988 NNT, VanderWeele & Ding
-2017 E-value). Back-of-registry module.
+2017 E-value).
 """
 
 from __future__ import annotations

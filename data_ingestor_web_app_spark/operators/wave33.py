@@ -7,7 +7,7 @@ member CLOSER to the centroid — keeping the outliers preserves diversity
 operator from dedup_embedding). events_seasonal_residuals finishes the
 time-series family with an hour-of-day seasonal baseline and exact-
 arithmetic daily residuals. fn_url_parse / fn_trig extend the scalar
-function matrix. Registered at the back of registry._MODULES.
+function matrix.
 """
 
 from __future__ import annotations

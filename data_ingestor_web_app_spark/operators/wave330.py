@@ -2,7 +2,7 @@
 1932) over the per-type one-sample z-tests, the Stuart-Maxwell
 marginal-homogeneity test on the per-user transition table, and Kendall's
 coefficient of concordance W (Kendall & Babington Smith 1939) across
-the three metric rankers. All public methods. Back-of-registry module.
+the three metric rankers. All public methods.
 """
 
 from __future__ import annotations

@@ -3,7 +3,7 @@ Hubert & Arabie's adjusted Rand 1985, Fowlkes-Mallows 1983), cluster
 purity / inverse purity (Zhao & Karypis 2001), and the classical
 set-similarity shelf (Sørensen-Dice 1948, Szymkiewicz-Simpson overlap,
 Ochiai 1957, Tversky 1977, Bray-Curtis 1957) between two language
-token populations. Back-of-registry module.
+token populations.
 """
 
 from __future__ import annotations

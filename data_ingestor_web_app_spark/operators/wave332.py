@@ -3,7 +3,7 @@ series at three cluster sizes, the Hjorth descriptors (Hjorth, EEG
 Clin. Neurophysiol. 1970) with Petrosian's fractal dimension
 (Petrosian, IEEE CBMS 1995), and the secretary-problem 1/e stopping
 rule (Lindley 1961 / Dynkin 1963) replayed over the order arrival
-sequence. Back-of-registry module.
+sequence.
 """
 
 from __future__ import annotations

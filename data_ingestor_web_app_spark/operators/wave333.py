@@ -2,7 +2,7 @@
 Journal 2012) with exact hierarchical pair counting via prefix sums,
 and a critical-path-method / PERT pass (Kelley & Walker 1959; Malcolm
 et al. 1959) over a level-structured task DAG derived from the nation
-and supplier tables. Back-of-registry module.
+and supplier tables.
 """
 
 from __future__ import annotations

@@ -2,7 +2,6 @@
 Lowrance & Wagner, JACM 1975) as an Arrow-batched pandas UDF checked
 against DuckDB's builtin, and Huffman code lengths (Huffman, Proc. IRE
 1952) by unrolled greedy merges over the 5-symbol event-type alphabet.
-Back-of-registry module.
 """
 
 from __future__ import annotations

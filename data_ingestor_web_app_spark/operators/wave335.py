@@ -2,7 +2,6 @@
 Straub 1970) over nation-level order severities, and the
 Bornhuetter-Ferguson reserve (Bornhuetter & Ferguson, PCAS 1972) on
 the same development triangle as warehouse_chain_ladder.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 Merton 1973) on a deterministic parameter grid with the established
 A&S erfc normal CDF, and Jaro-Winkler string similarity (Jaro 1989;
 Winkler 1990) as a pandas UDF cross-checked against DuckDB's native
-implementation. Back-of-registry module.
+implementation.
 """
 
 from __future__ import annotations

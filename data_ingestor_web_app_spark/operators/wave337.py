@@ -1,7 +1,6 @@
 """Wave-337: Chatterjee's rank correlation xi (Chatterjee, JASA 2021),
 Siegel's repeated-median slope (Siegel, Biometrika 1982), and the
-p-chart attribute control chart (Shewhart 1931). Back-of-registry
-module.
+p-chart attribute control chart (Shewhart 1931).
 """
 
 from __future__ import annotations

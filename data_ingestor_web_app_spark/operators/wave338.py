@@ -2,7 +2,7 @@
 1981; Glass 1976; McGraw & Wong's CLES 1992), an abridged actuarial
 life table (Graunt 1662 lineage; standard demographic qx/lx/ex
 columns), and the natural visibility graph (Lacasa et al., PNAS 2008)
-of the daily series. Back-of-registry module.
+of the daily series.
 """
 
 from __future__ import annotations

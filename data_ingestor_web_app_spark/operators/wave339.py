@@ -1,7 +1,6 @@
 """Wave-339: Wagner-Whitin dynamic lot sizing (Wagner & Whitin,
 Management Science 1958) over the 1998 monthly order-demand series —
 the exact DP unrolled period-by-period into both engines' plans.
-Back-of-registry module.
 """
 
 from __future__ import annotations

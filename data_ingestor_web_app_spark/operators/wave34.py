@@ -4,8 +4,7 @@ engagement, dataset shard export, datetime function family.
 events_holt_smoothing introduces a new determinism pattern: an ORDERED
 FOLD recurrence (Spark sort_array + aggregate vs a DuckDB recursive CTE)
 with α = β = 0.5 so every intermediate is a dyadic rational — exact in
-binary floating point, no rounding tricks needed. Registered at the back
-of registry._MODULES.
+binary floating point, no rounding tricks needed.
 """
 
 from __future__ import annotations

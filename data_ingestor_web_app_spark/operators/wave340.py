@@ -2,7 +2,7 @@
 correction (Breslow & Day 1980; Tarone, Biometrika 1985), weighted
 Cohen's kappa (Cohen, Psychological Bulletin 1968), and the
 Baumgartner-Weiß-Schindler rank test (Baumgartner, Weiß & Schindler,
-Biometrics 1998). Back-of-registry module.
+Biometrics 1998).
 """
 
 from __future__ import annotations

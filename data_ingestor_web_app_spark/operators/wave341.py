@@ -2,7 +2,6 @@
 bearing — public spherical trigonometry), ray-casting point-in-polygon
 (the Jordan curve crossing test), and the order-4 Hilbert curve index
 (Hilbert 1891; the xy2d bit algorithm) — the spatial/locality shelf.
-Back-of-registry module.
 """
 
 from __future__ import annotations

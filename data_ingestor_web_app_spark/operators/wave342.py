@@ -1,6 +1,6 @@
 """Wave-342: weighted rendezvous (highest-random-weight) hashing
 (Thaler & Ravishankar, IEEE/ACM ToN 1998) with the minimal-disruption
-proof under node removal. Back-of-registry module.
+proof under node removal.
 """
 
 from __future__ import annotations

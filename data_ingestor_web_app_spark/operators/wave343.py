@@ -1,7 +1,6 @@
 """Wave-343: monetary-unit (dollar-unit) audit sampling (Stringer
 1963 lineage; AICPA standard) and the CORDIC fixed-point sin/cos
 kernel (Volder, IRE Trans. 1959) unrolled to 16 integer iterations.
-Back-of-registry module.
 """
 
 from __future__ import annotations

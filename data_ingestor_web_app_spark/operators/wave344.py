@@ -2,7 +2,7 @@
 earliest-due-date rule for maximum lateness (Jackson 1955) and
 Smith's WSPT ratio rule for weighted completion time (Smith, NRLQ
 1956) — plus Vickrey second-price auctions (Vickrey, J. Finance
-1961). Back-of-registry module.
+1961).
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-345: SimRank structural similarity (Jeh & Widom, KDD 2002) by
 fixed-point integer iteration on the circulant nation graph.
-Back-of-registry module.
 """
 
 from __future__ import annotations

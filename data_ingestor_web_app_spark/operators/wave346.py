@@ -1,7 +1,6 @@
 """Wave-346: phase dispersion minimization (Stellingwerf, ApJ 1978)
 — period detection by folding the daily series on candidate periods
-and scoring the pooled within-phase-bin variance. Back-of-registry
-module.
+and scoring the pooled within-phase-bin variance.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-347: Thurstone Case V paired-comparison scaling (Thurstone,
 Psychological Review 1927) with Acklam's inverse-normal-CDF rational
 approximation (public algorithm, |rel err| < 1.15e-9).
-Back-of-registry module.
 """
 
 from __future__ import annotations

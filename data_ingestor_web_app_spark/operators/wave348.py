@@ -2,7 +2,7 @@
 (Dickey & Fuller, JASA 1979), the KPSS level-stationarity test
 (Kwiatkowski, Phillips, Schmidt & Shin, J. Econometrics 1992), and
 the Cochrane-Orcutt AR(1) correction (Cochrane & Orcutt, JASA 1949)
-on the daily mean-value series. Back-of-registry module.
+on the daily mean-value series.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Wave-349: VAR(1) fit with companion-eigenvalue stability (Sims,
 Econometrica 1980 lineage) on the purchase/click daily pair, and the
 Quandt-Andrews sup-F structural-break scan (Quandt, JASA 1960;
-Andrews, Econometrica 1993) on the daily trend. Back-of-registry
-module.
+Andrews, Econometrica 1993) on the daily trend.
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Wave-351: Che's LRU characteristic-time approximation (Che, Tung &
 Wang, IEEE JSAC 2002) solved by unrolled Newton steps, and
 majority-quorum availability from per-replica uptimes (the classic
-binomial reliability model, Gifford 1979 lineage). Back-of-registry
-module.
+binomial reliability model, Gifford 1979 lineage).
 """
 
 from __future__ import annotations

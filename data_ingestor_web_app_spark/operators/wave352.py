@@ -1,7 +1,7 @@
 """Wave-352: position-auction revenue — generalized second price vs
 VCG (Edelman, Ostrovsky & Schwarz, AER 2007; Varian, IJIO 2007) — and
 the panel fixed-effects within estimator (the Mundlak/classic
-demeaning identity). Back-of-registry module.
+demeaning identity).
 """
 
 from __future__ import annotations

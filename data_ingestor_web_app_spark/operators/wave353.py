@@ -1,6 +1,6 @@
 """Wave-353: inverse-distance-weighted spatial interpolation (Shepard,
 ACM 1968) and the Clark-Evans nearest-neighbour aggregation index
-(Clark & Evans, Ecology 1954). Back-of-registry module.
+(Clark & Evans, Ecology 1954).
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-354: the ROC convex hull with the cost-optimal operating
-point (Provost & Fawcett, Machine Learning 2001). Back-of-registry
-module.
+point (Provost & Fawcett, Machine Learning 2001).
 """
 
 from __future__ import annotations

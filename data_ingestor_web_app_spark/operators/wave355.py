@@ -1,7 +1,7 @@
 """Wave-355: the remaining classical power indices on the weighted
 majority game of model_banzhaf_power — Shapley-Shubik (APSR 1954),
 Johnston (Environment & Planning A 1978), and Deegan-Packel (IJGT
-1978). Back-of-registry module.
+1978).
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-356: the Hotelling T² multivariate control chart (Hotelling
 1947, the original multivariate SPC statistic) on the daily
-purchase/click mean pair. Back-of-registry module.
+purchase/click mean pair.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-358: a last-writer-wins CRDT merge audit (Shapiro, Preguiça,
 Baquero & Zawirski, INRIA RR-7506, 2011) and a Merkle tree over
 order-independent bucket digests (Merkle, CRYPTO '87) — the
-distributed-consistency shelf. Back-of-registry module.
+distributed-consistency shelf.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-359: bin-packing lower bounds L1 and L2 (Martello & Toth,
 Knapsack Problems, Wiley 1990) by an exact integer alpha-sweep.
-Back-of-registry module.
 """
 
 from __future__ import annotations

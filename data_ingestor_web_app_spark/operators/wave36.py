@@ -4,7 +4,6 @@ explode_outer null semantics.
 Completes the as-of family (backward / banded / nearest / now FORWARD)
 and demonstrates the bitmap-union approach to rolling DISTINCT counts —
 the one windowed aggregate that can't be computed from partial sums.
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

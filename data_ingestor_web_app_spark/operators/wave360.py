@@ -1,7 +1,6 @@
 """Wave-360: zero-inflated Poisson moment fit with van den Broek's
 score test (Biometrics 1995), and the beta-binomial method-of-moments
 fit (Skellam 1948; the intraclass-correlation parameterization).
-Back-of-registry module.
 """
 
 from __future__ import annotations

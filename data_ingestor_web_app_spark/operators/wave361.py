@@ -1,6 +1,6 @@
 """Wave-361: knee-point detection by maximum chord distance (the
 Kneedle principle, Satopää, Albrecht, Irwin & Raghavan, ICDCS
-workshops 2011). Back-of-registry module.
+workshops 2011).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-362: Elo rating replay over daily head-to-heads (Elo 1978 "The
 Rating of Chessplayers"; FIDE handbook table 8.1b conversion) and
 Littlewood's two-fare protection level (Littlewood 1972, the founding
-revenue-management rule). Back-of-registry module.
+revenue-management rule).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-363: exact Kemeny-Young consensus ranking by exhaustive
 permutation scoring (Kemeny 1959; Young & Levenglick 1978) and the
 Törnqvist / Walsh / Marshall-Edgeworth superlative price indices
-(Diewert 1976, ILO CPI manual). Back-of-registry module.
+(Diewert 1976, ILO CPI manual).
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-364: Fligner-Killeen k-sample scale test (Fligner & Killeen, JASA
 1976; the normal-scores form in Conover, Johnson & Johnson 1981) and the
 EMSR-b nested protection levels (Belobaba 1992), extending wave362's
-Littlewood rule to three fare classes. Back-of-registry module.
+Littlewood rule to three fare classes.
 """
 
 from __future__ import annotations

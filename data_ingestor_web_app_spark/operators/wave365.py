@@ -1,7 +1,7 @@
 """Wave-365: DDM concept-drift detector replay (Gama, Medas, Castillo &
 Rodrigues, SBIA 2004) and exact top-down binary segmentation of the daily
 series (Scott & Knott 1974 lineage; the classic changepoint baseline PELT
-is measured against). Back-of-registry module.
+is measured against).
 """
 
 from __future__ import annotations

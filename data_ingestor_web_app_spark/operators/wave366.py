@@ -1,7 +1,6 @@
 """Wave-366: Plackett-Luce ranking model fit by Hunter's MM algorithm
 (Plackett 1975; Luce 1959; Hunter, Annals of Statistics 2004), with the
 entire 8-iteration fixed-point unrolled in EXACT INTEGER arithmetic.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-368: entropic optimal transport by Sinkhorn-Knopp scaling
 (Cuturi, NeurIPS 2013) in exact integer arithmetic, and Welch's
 heteroscedastic one-way ANOVA (Welch, Biometrika 1951).
-Back-of-registry module.
 """
 
 from __future__ import annotations

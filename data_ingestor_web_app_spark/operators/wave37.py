@@ -4,7 +4,6 @@ function family, sliding percentile.
 dq_quarantine_split is the validation stage of the reference's ingest
 domain generalized: classify every record against a rule set, route
 good/bad to separate sinks, account for every rejection reason.
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-370: k-truss cohesion peeling (Cohen, NSA tech report 2008 —
 "Trusses: cohesive subgraphs for social network analysis") and the chrF
-character n-gram F-score (Popović, WMT 2015). Back-of-registry module.
+character n-gram F-score (Popović, WMT 2015).
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-371: Bass diffusion model fit (Bass, Management Science 1969 —
 "A New Product Growth Model for Consumer Durables") by the discrete-form
-OLS of Bass's own paper. Back-of-registry module.
+OLS of Bass's own paper.
 """
 
 from __future__ import annotations

@@ -3,7 +3,6 @@ frequentist MVUE of Goodman, JASA 1952, popularized by the WWII Allied
 armor-production estimates) and the Vargha-Delaney A measure (Vargha &
 Delaney, J. Educ. Behav. Stat. 2000 — the common-language stochastic-
 superiority effect size CS/SE benchmarking guidelines mandate).
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 "Programming Pearls" — here in the exact prefix-sum formulation, which is
 windowable) over the demeaned daily event series, and Savitzky-Golay
 polynomial smoothing (Savitzky & Golay, Analytical Chemistry 1964) with
-their exact integer convolution weights. Back-of-registry module.
+their exact integer convolution weights.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-374: Ripley's K / Besag's L point-pattern statistics (Ripley,
 J. Royal Stat. Soc. B 1977) and join-count statistics for lattice
 autocorrelation (Moran, Biometrika 1948; Cliff & Ord 1973) over a
-deterministic user-behavior grid. Back-of-registry module.
+deterministic user-behavior grid.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 Ratanamahatana, KAIS 2005 — the envelope bound that makes DTW indexable)
 between day-of-week hourly load profiles, and head/tail breaks
 classification (Jiang, The Professional Geographer 2013) for heavy-tailed
-document lengths. Back-of-registry module.
+document lengths.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-376: the Cox-Stuart trend test (Cox & Stuart, Biometrika 1955 —
 the sign test on first-half/second-half pairs) and the Shewhart X̄-R
 control chart (Shewhart 1931; constants from the ASTM STP-15D tables)
-over daily event loads. Back-of-registry module.
+over daily event loads.
 """
 
 from __future__ import annotations

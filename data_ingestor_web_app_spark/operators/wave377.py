@@ -3,7 +3,6 @@ Clin. Biochem. 1983 — the method-comparison regression that is robust AND
 scale-invariant, unlike Theil-Sen it shift-corrects the slope median) and
 group-sequential monitoring boundaries (O'Brien & Fleming, Biometrics
 1979; Pocock, Biometrika 1977) applied to a sequential A/B metric.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-378: one-covariate ANCOVA adjusted means (Fisher 1932; the
 pooled-within-slope formulation of Huitema 2011) and the attribute
 g-chart for rare-event intervals (Benneyan, Health Care Management
-Science 2001). Back-of-registry module.
+Science 2001).
 """
 
 from __future__ import annotations

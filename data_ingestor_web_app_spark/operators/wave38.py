@@ -4,8 +4,7 @@ scalar ops, cumulative new-user growth.
 agg_drift_psi is the ML-monitoring Population Stability Index between
 the first and second half of the event stream; events_forecast_backtest
 scores the naive (lag-1) forecast with MAE / MAPE / SMAPE — the baseline
-every real forecaster must beat. Registered at the back of
-registry._MODULES.
+every real forecaster must beat.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 Barlow & Brunk 1972 — the estimator PAVA computes) over the hourly value
 profile, and classical seasonal decomposition (the moving-average method of
 Macaulay 1931, the "decompose" every forecasting course starts with) of
-the daily event series. Back-of-registry module.
+the daily event series.
 """
 
 from __future__ import annotations

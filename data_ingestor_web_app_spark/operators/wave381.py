@@ -1,7 +1,6 @@
 """Wave-381: Engle's ARCH LM test (Engle, Econometrica 1982 — volatility
 clustering) and the Goldfeld-Quandt heteroscedasticity test (Goldfeld &
-Quandt, JASA 1965) on the daily event-count series. Back-of-registry
-module.
+Quandt, JASA 1965) on the daily event-count series.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Wave-382: Knox space-time interaction statistic (Knox, Applied
 Statistics 1964 — the epidemic clustering test) and Lempel-Ziv LZ76
 sequence complexity (Lempel & Ziv, IEEE IT 1976; Kaspar & Schuster,
-Phys. Rev. A 1987 parsing algorithm). Back-of-registry module.
+Phys. Rev. A 1987 parsing algorithm).
 """
 
 from __future__ import annotations

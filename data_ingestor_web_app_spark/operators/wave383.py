@@ -1,7 +1,7 @@
 """Wave-383: seasonal Mann-Kendall trend test (Hirsch, Slack & Smith,
 Water Resources Research 1982) and the BFS double-sweep diameter lower
 bound (Magnien, Latapy & Habib, ACM JEA 2009 — the standard cheap
-diameter estimator). Back-of-registry module.
+diameter estimator).
 """
 
 from __future__ import annotations

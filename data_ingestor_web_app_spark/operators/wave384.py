@@ -1,6 +1,6 @@
 """Wave-384: Bayesian online changepoint detection (Adams & MacKay,
 arXiv:0710.3742, 2007) with a Beta-Bernoulli predictive, run entirely in
-exact integer arithmetic. Back-of-registry module.
+exact integer arithmetic.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-385: seasonal Sen slope (Hirsch, Slack & Smith, Water Resources
 Research 1982 — the magnitude estimator paired with the seasonal
-Mann-Kendall test of wave383). Back-of-registry module.
+Mann-Kendall test of wave383).
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-386: windowed Fano factor (Fano, Phys. Rev. 1947; the
 point-process dispersion diagnostic) and Higuchi fractal dimension
-(Higuchi, Physica D 1988 — the time-domain FD estimator). Back-of-registry
-module.
+(Higuchi, Physica D 1988 — the time-domain FD estimator).
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-387: Crow-AMSAA reliability-growth MLE (Crow, AMSAA TR-652 1975;
 MIL-HDBK-189 — the NHPP power-law process) and the u-chart (defects per
 unit with varying subgroup size; Shewhart/Western Electric SPC family).
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ over registered views (sql_tpch_q1_via_sql), fits per-group models in
 grouped Arrow batches (udaf_group_ols_pandas — numerically pinned to the
 SQL regr_* aggregates), and shows deterministic distributed sampling
 (hash-rank reservoir — portable across engines AND across reruns, unlike
-rand()-based sampling). Registered at the back of registry._MODULES.
+rand()-based sampling).
 """
 
 from __future__ import annotations

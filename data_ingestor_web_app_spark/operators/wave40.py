@@ -1,7 +1,6 @@
 """Wave-40: k-anonymity audit, feature hashing, try_* error-safe family.
 
-Data-governance + ML-featurization + ANSI-mode ergonomics. Registered at
-the back of registry._MODULES.
+Data-governance + ML-featurization + ANSI-mode ergonomics.
 """
 
 from __future__ import annotations

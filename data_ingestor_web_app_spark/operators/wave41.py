@@ -3,8 +3,7 @@ prediction, string scalar family.
 
 pipeline_quality_ensemble wires three of the engine's own quality
 signals (Gopher rules, langid confidence, bigram-LM NLL) into one keep
-vote — the ensemble gate real curation stacks ship. Registered at the
-back of registry._MODULES.
+vote — the ensemble gate real curation stacks ship.
 """
 
 from __future__ import annotations

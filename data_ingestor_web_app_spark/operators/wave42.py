@@ -6,7 +6,6 @@ streaming suite hadn't pinned yet: a checkpointed file stream consumed in
 TWO separate availableNow runs (new files land between them) whose
 appended sink must equal the one-shot batch transform — incremental ==
 batch for ETL, the same discipline stream_cdc_upsert proves for MERGE.
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

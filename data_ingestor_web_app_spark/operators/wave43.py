@@ -1,7 +1,5 @@
 """Wave-43: vocab coverage audit, SLO burn rate, FILTER-clause
 aggregates, delta-method ratio CI.
-
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-46: calendar heatmap pivot, per-doc character entropy, balanced
-deterministic downsampling. Registered at the back of registry._MODULES.
+deterministic downsampling.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-49: ingest outage detection, Wald–Wolfowitz runs test,
-zlib-compressibility quality signal. Registered at the back of
-registry._MODULES.
+zlib-compressibility quality signal.
 """
 
 from __future__ import annotations

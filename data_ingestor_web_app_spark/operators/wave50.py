@@ -1,5 +1,4 @@
 """Wave-50: Pythagorean mean family, SQL LATERAL correlated join.
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-52: alert debouncing (scalable gaps-and-islands), printf
-formatting parity, dynamic partition overwrite. Registered at the back
-of registry._MODULES.
+formatting parity, dynamic partition overwrite.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
 """Wave-53: walk-forward validation splits, heavy-user concentration.
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-54: schema drift report, arrays_zip family, Herfindahl
-concentration index. Registered at the back of registry._MODULES.
+concentration index.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-55: cumulative unique users, Theil–Sen robust trend,
 l-diversity privacy audit, n-gram contamination fraction, bot-likeness
 scoring from inter-arrival moments, type-token-ratio length buckets.
-Registered at the back of registry._MODULES (driver slots 1-50 stable).
 """
 
 from __future__ import annotations

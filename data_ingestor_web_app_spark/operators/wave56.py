@@ -1,6 +1,6 @@
 """Wave-56: zone-map file-skipping report from real parquet footers,
 TPC-H-style refresh-stream impact diff, image intensity histograms over
-decoded PNGs, A/B test power analysis. Back-of-registry module.
+decoded PNGs, A/B test power analysis.
 """
 
 from __future__ import annotations

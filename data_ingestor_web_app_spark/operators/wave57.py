@@ -1,6 +1,6 @@
 """Wave-57: distributed Misra-Gries heavy hitters with exact recount,
 conversion funnel with per-step time windows, consistent-hash shard
-routing vs mod-N. Back-of-registry module.
+routing vs mod-N.
 """
 
 from __future__ import annotations

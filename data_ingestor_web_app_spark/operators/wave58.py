@@ -1,5 +1,5 @@
 """Wave-58: mixture divergence (KL/JS), CUPED variance-reduced A/B
-readout, journey-string sequence CEP via regex. Back-of-registry module.
+readout, journey-string sequence CEP via regex.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-59: ANN recall-vs-nprobe curve, interrupted time series
-(segmented regression). Back-of-registry module.
+(segmented regression).
 """
 
 from __future__ import annotations

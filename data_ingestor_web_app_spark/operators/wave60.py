@@ -1,5 +1,5 @@
 """Wave-60: native recursive CTE (Spark 4 WITH RECURSIVE), SQL pipe
-syntax, hash-noise Laplace mechanism demo. Back-of-registry module.
+syntax, hash-noise Laplace mechanism demo.
 """
 
 from __future__ import annotations

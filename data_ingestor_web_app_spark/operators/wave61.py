@@ -1,6 +1,6 @@
 """Wave-61: ALS half-step (closed-form per-user factor solve), Neyman
 stratified sampling allocation, Benjamini-Hochberg FDR across segment
-tests. Back-of-registry module.
+tests.
 """
 
 from __future__ import annotations

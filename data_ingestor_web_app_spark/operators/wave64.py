@@ -1,6 +1,5 @@
 """Wave-64: top-N + OTHER bucket, absorbing-chain conversion
 probability, synthetic QA span extraction, Mann-Kendall trend test.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-65 (batch): referential-integrity audit across every FK edge,
 retention decay fit, role-playing date dimension join.
-Back-of-registry module.
 """
 
 from __future__ import annotations

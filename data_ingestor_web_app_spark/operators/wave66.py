@@ -1,6 +1,5 @@
 """Wave-66: empirical-Bayes rate shrinkage, embedding drift between
 corpus halves, peak detection with prominence, uncertainty sampling.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-67: Tukey-fence outlier audit, market-basket association lift,
-token-embedding pooling. Back-of-registry module.
+token-embedding pooling.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-68: Shapley-value channel attribution, ROUGE n-gram overlap
-metrics. Back-of-registry module.
+metrics.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-69: pinball-loss quantile forecast evaluation, Haar wavelet
-multi-scale energy decomposition. Back-of-registry module.
+multi-scale energy decomposition.
 """
 
 from __future__ import annotations

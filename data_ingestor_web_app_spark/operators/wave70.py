@@ -1,5 +1,5 @@
 """Wave-70: O'Brien-Fleming sequential A/B looks, SVD power-iteration
-step, HNSW layer assignment audit. Back-of-registry module.
+step, HNSW layer assignment audit.
 """
 
 from __future__ import annotations

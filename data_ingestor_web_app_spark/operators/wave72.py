@@ -1,6 +1,5 @@
 """Wave-72: Cohen's kappa between heuristic raters, log-log price
 elasticity, global SSIM over real decoded image pairs.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-73: rank-based AUC-ROC with tie handling, keyframe selection
-on top of scene-cut detection. Back-of-registry module.
+on top of scene-cut detection.
 """
 
 from __future__ import annotations

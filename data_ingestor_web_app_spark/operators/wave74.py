@@ -1,6 +1,5 @@
 """Wave-74: Gumbel extreme-value fit with return levels, existence
 (mark) join flags, Shewhart individuals control chart.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-76: propensity-stratified covariate balance (SMD), versioned
-time-travel read. Back-of-registry module.
+time-travel read.
 """
 
 from __future__ import annotations

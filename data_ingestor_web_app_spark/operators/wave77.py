@@ -1,5 +1,4 @@
 """Wave-77: DAU growth accounting, binary-quantized embedding recall.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-78: one EM step of a two-component 1-D Gaussian mixture,
-null-aware NOT IN semantics. Back-of-registry module.
+null-aware NOT IN semantics.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-79: tabular CUSUM drift detection in exact integer arithmetic,
 a closed-form logistic-regression Newton step from sufficient statistics,
 and integral images (2-D prefix sums) over real decoded PNGs.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-80: BM25 relevance ranking with fixed-order term sums, a
 t-closeness privacy audit in exact integer EMD arithmetic, and a
 Goertzel-style periodogram over an integer-scaled trig table.
-Back-of-registry module.
 """
 
 from __future__ import annotations

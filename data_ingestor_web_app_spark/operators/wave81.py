@@ -1,6 +1,6 @@
 """Wave-81: degree assortativity in exact moments, DBSCAN core-point
 classification via grid hashing, and an exhaustive decision-stump split
-search from cumulative class counts. Back-of-registry module.
+search from cumulative class counts.
 """
 
 from __future__ import annotations

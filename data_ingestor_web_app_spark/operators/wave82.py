@@ -1,6 +1,6 @@
 """Wave-82: k-NN majority-vote classification over embeddings, Kadane
 max-gain window with exact start/end recovery, and 3x3 grayscale erosion
-over real decoded PNGs. Back-of-registry module.
+over real decoded PNGs.
 """
 
 from __future__ import annotations

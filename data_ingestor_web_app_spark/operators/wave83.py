@@ -1,6 +1,6 @@
 """Wave-83: RAKE keyphrase extraction via position islands, exact
 isotonic calibration through the minimax formula, and Hodges-Lehmann
-robust location estimation. Back-of-registry module.
+robust location estimation.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-84: closed-form 2-feature PCA from exact moments, Warner
 randomized response with a portable hash coin, and zero-crossing rate
-over real decoded WAVs. Back-of-registry module.
+over real decoded WAVs.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-85: item-item co-purchase cosine similarity, process-capability
 indices (Cp/Cpk), and audience-overlap Jaccard between event types.
-Back-of-registry module.
 """
 
 from __future__ import annotations

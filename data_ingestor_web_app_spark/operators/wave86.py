@@ -1,5 +1,5 @@
 """Wave-86: sample-ratio-mismatch detection, decile gains/lift table,
-and standardized contingency residuals. Back-of-registry module.
+and standardized contingency residuals.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-87: GLCM texture features over decoded PNGs, Markov stationary
 distribution by unrolled power iteration in fixed-order arithmetic, and
-the GROUP BY ALL / ORDER BY ALL SQL surface. Back-of-registry module.
+the GROUP BY ALL / ORDER BY ALL SQL surface.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-88: Burrows' Delta stylometry between sources, Cramér's V
-effect size, and a freshness-lag SLA audit. Back-of-registry module.
+effect size, and a freshness-lag SLA audit.
 """
 
 from __future__ import annotations

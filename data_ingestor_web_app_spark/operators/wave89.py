@@ -1,6 +1,6 @@
 """Wave-89: Newman modularity of the supplier co-sourcing graph,
 Horvitz-Thompson design-weighted estimation with exact integer weights,
-and a Bloom-filter build/probe audit. Back-of-registry module.
+and a Bloom-filter build/probe audit.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-90: Erlang-C staffing curve, Youden-J optimal threshold, and
 Lincoln-Petersen / Chapman capture-recapture estimation.
-Back-of-registry module.
 """
 
 from __future__ import annotations

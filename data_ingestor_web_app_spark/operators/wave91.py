@@ -1,6 +1,6 @@
 """Wave-91: Kaplan-Meier survival with staggered-entry censoring,
 EWMA control chart in exact dyadic arithmetic, and rank-paired
-propensity matching. Back-of-registry module.
+propensity matching.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-92: single-pass Poisson bootstrap, difference-in-differences,
-and chunk-boundary overlap dedup. Back-of-registry module.
+and chunk-boundary overlap dedup.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-93: AR(2) Yule-Walker estimation, Chinchilla compute-optimal
 planning over the real corpus, and Otsu thresholding of decoded PNGs.
-Back-of-registry module.
 """
 
 from __future__ import annotations

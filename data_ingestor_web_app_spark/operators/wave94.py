@@ -1,5 +1,5 @@
 """Wave-94: frequency capping, metadata-filtered vector top-k, and
-boilerplate template-prefix detection. Back-of-registry module.
+boilerplate template-prefix detection.
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 """Wave-95: multinomial Naive Bayes source classification, Cliff's
 delta effect size in exact half-rank arithmetic, and the Pareto 80/20
-concentration cutoff. Back-of-registry module.
+concentration cutoff.
 """
 
 from __future__ import annotations

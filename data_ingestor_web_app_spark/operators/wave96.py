@@ -1,5 +1,5 @@
 """Wave-96: linear-interpolation gap fill, McNemar's paired test, and
-MTTR/MTBF incident reliability metrics. Back-of-registry module.
+MTTR/MTBF incident reliability metrics.
 """
 
 from __future__ import annotations

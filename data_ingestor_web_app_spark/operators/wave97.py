@@ -1,5 +1,5 @@
 """Wave-97: Gamma method-of-moments fitting, Cronbach's alpha, and
-Fleiss' kappa multi-rater agreement. Back-of-registry module.
+Fleiss' kappa multi-rater agreement.
 """
 
 from __future__ import annotations

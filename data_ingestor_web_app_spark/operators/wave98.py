@@ -1,6 +1,5 @@
 """Wave-98: Holt-Winters additive seasonal smoothing, Spearman rank
 correlation via doubled midranks, and cross-field data-quality rules.
-Back-of-registry module.
 """
 
 from __future__ import annotations

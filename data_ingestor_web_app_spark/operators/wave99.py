@@ -1,6 +1,5 @@
 """Wave-99: two histogram-GBM boosting rounds, restricted mean
 survival time, and language-balance temperature weighting.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -2,8 +2,9 @@
 
 Every operator from SURVEY.md §2B registers itself here via the ``@query``
 decorator, carrying its DuckDB oracle SQL alongside the Spark implementation
-so the pair can never drift apart. ``__spark_entry__.py`` re-exports the two
-dicts for the driver.
+so the pair can never drift apart. ``load_all`` finds the modules by
+walking the package, so a new module registers just by existing.
+``__spark_entry__.py`` re-exports the two dicts for the driver.
 
 Determinism contract (SURVEY §7 hard parts):
 - alias every computed column identically in Spark and oracle SQL;
@@ -25,6 +26,7 @@ two ENGINES agree; the replay pytest proves the MATH is right.
 from __future__ import annotations
 
 import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,474 +39,6 @@ ORACLES: dict[str, str] = {}
 # Streaming/sink builders run a replayed stream when invoked, so tools and
 # guards that build every batch query skip names with these prefixes.
 STREAM_PREFIXES = ("stream_", "sink_")
-
-# Registration order is deliberate: external correctness tooling samples the
-# FIRST 50 registered queries each round, so we rotate a 50-slot window of
-# never-yet-driver-checked modules to the front every round.
-#   round 1 window: the relational core (scans/filters/joins/aggs/windows/
-#                   setops + flagship TPC-H) — all green.
-#   round 2 window: fn_*/ingest/streaming/dedup/sim/text/tpch core — green
-#                   after the two typed-oracle fixes.
-#   round 3 window (this order): multimodal, tpch_extra, vector_extra,
-#                   events_analytics, timeseries, corpus_quality, warehouse,
-#                   tpch_more, text_extra, upsert, collation — exactly 50
-#                   queries, none previously driver-checked.
-# New queries this round must be added to BACK-of-list modules (or new
-# modules appended after the window block) so they don't shift slots 1-50.
-_MODULES = [
-    # --- round-10 driver window: exactly 50 never-driver-checked queries
-    #     (waves 318-337 = 48 queries + wave339 + wave342 = 50 — the oldest
-    #     never-sampled block after r9 covered 294-317+361; every slot is
-    #     SQL-oracle-backed; the committed WINDOW_PLAN.json pins this list
-    #     and tests/test_window_plan.py asserts front-50 == plan with zero
-    #     overlap vs the r1-r9 CORRECTNESS artifacts; the r9 window block
-    #     wave294..wave317+361 is demoted below) ---
-    "data_ingestor_web_app_spark.operators.wave318",  # 2 (cum 2)
-    "data_ingestor_web_app_spark.operators.wave319",  # 2 (cum 4)
-    "data_ingestor_web_app_spark.operators.wave320",  # 2 (cum 6)
-    "data_ingestor_web_app_spark.operators.wave321",  # 2 (cum 8)
-    "data_ingestor_web_app_spark.operators.wave322",  # 1 (cum 9)
-    "data_ingestor_web_app_spark.operators.wave323",  # 2 (cum 11)
-    "data_ingestor_web_app_spark.operators.wave324",  # 2 (cum 13)
-    "data_ingestor_web_app_spark.operators.wave325",  # 2 (cum 15)
-    "data_ingestor_web_app_spark.operators.wave326",  # 2 (cum 17)
-    "data_ingestor_web_app_spark.operators.wave327",  # 5 (cum 22)
-    "data_ingestor_web_app_spark.operators.wave328",  # 3 (cum 25)
-    "data_ingestor_web_app_spark.operators.wave329",  # 3 (cum 28)
-    "data_ingestor_web_app_spark.operators.wave330",  # 3 (cum 31)
-    "data_ingestor_web_app_spark.operators.wave331",  # 3 (cum 34)
-    "data_ingestor_web_app_spark.operators.wave332",  # 3 (cum 37)
-    "data_ingestor_web_app_spark.operators.wave333",  # 2 (cum 39)
-    "data_ingestor_web_app_spark.operators.wave334",  # 2 (cum 41)
-    "data_ingestor_web_app_spark.operators.wave335",  # 2 (cum 43)
-    "data_ingestor_web_app_spark.operators.wave336",  # 2 (cum 45)
-    "data_ingestor_web_app_spark.operators.wave337",  # 3 (cum 48)
-    "data_ingestor_web_app_spark.operators.wave339",  # 1 (cum 49)
-    "data_ingestor_web_app_spark.operators.wave342",  # 1 (cum 50)
-    # --- r9 window (waves 294-317 + 361, driver-checked in r9) demoted ---
-    "data_ingestor_web_app_spark.operators.wave294",  # 2 (cum 2)
-    "data_ingestor_web_app_spark.operators.wave295",  # 2 (cum 4)
-    "data_ingestor_web_app_spark.operators.wave296",  # 2 (cum 6)
-    "data_ingestor_web_app_spark.llm.wave297",  # 2 (cum 8)
-    "data_ingestor_web_app_spark.operators.wave298",  # 2 (cum 10)
-    "data_ingestor_web_app_spark.operators.wave299",  # 2 (cum 12)
-    "data_ingestor_web_app_spark.operators.wave300",  # 2 (cum 14)
-    "data_ingestor_web_app_spark.operators.wave301",  # 4 (cum 18)
-    "data_ingestor_web_app_spark.operators.wave302",  # 2 (cum 20)
-    "data_ingestor_web_app_spark.llm.wave303",  # 2 (cum 22)
-    "data_ingestor_web_app_spark.llm.wave304",  # 2 (cum 24)
-    "data_ingestor_web_app_spark.operators.wave305",  # 2 (cum 26)
-    "data_ingestor_web_app_spark.operators.wave306",  # 2 (cum 28)
-    "data_ingestor_web_app_spark.operators.wave307",  # 2 (cum 30)
-    "data_ingestor_web_app_spark.llm.wave308",  # 2 (cum 32)
-    "data_ingestor_web_app_spark.operators.wave309",  # 2 (cum 34)
-    "data_ingestor_web_app_spark.operators.wave310",  # 2 (cum 36)
-    "data_ingestor_web_app_spark.operators.wave311",  # 2 (cum 38)
-    "data_ingestor_web_app_spark.operators.wave312",  # 1 (cum 39)
-    "data_ingestor_web_app_spark.operators.wave313",  # 2 (cum 41)
-    "data_ingestor_web_app_spark.operators.wave314",  # 2 (cum 43)
-    "data_ingestor_web_app_spark.operators.wave315",  # 2 (cum 45)
-    "data_ingestor_web_app_spark.operators.wave316",  # 2 (cum 47)
-    "data_ingestor_web_app_spark.llm.wave317",  # 2 (cum 49)
-    "data_ingestor_web_app_spark.operators.wave361",  # 1 (cum 50)
-    # --- r8 window (waves 267-293, driver-checked in r8) demoted:
-    #     (waves 267-293 — the newest audit/statistics block VERDICT r7
-    #     flagged as never-sampled mass, INCLUDING wave293's agg_medcouple
-    #     + fn_hamming_code which post-date the last doc regeneration;
-    #     wave268 is excluded to land on exactly 50; every slot is
-    #     SQL-oracle-backed/hash-exact-capable; r7's window block
-    #     wave135..wave159 is demoted below) ---
-    "data_ingestor_web_app_spark.operators.wave293",  # 2 (cum 2)
-    "data_ingestor_web_app_spark.operators.wave292",  # 2 (cum 4)
-    "data_ingestor_web_app_spark.operators.wave291",  # 2 (cum 6)
-    "data_ingestor_web_app_spark.operators.wave290",  # 2 (cum 8)
-    "data_ingestor_web_app_spark.operators.wave289",  # 2 (cum 10)
-    "data_ingestor_web_app_spark.operators.wave288",  # 1 (cum 11)
-    "data_ingestor_web_app_spark.operators.wave287",  # 2 (cum 13)
-    "data_ingestor_web_app_spark.llm.wave286",  # 2 (cum 15)
-    "data_ingestor_web_app_spark.operators.wave285",  # 2 (cum 17)
-    "data_ingestor_web_app_spark.operators.wave284",  # 2 (cum 19)
-    "data_ingestor_web_app_spark.operators.wave283",  # 2 (cum 21)
-    "data_ingestor_web_app_spark.operators.wave282",  # 2 (cum 23)
-    "data_ingestor_web_app_spark.operators.wave281",  # 2 (cum 25)
-    "data_ingestor_web_app_spark.operators.wave280",  # 2 (cum 27)
-    "data_ingestor_web_app_spark.operators.wave279",  # 2 (cum 29)
-    "data_ingestor_web_app_spark.llm.wave278",  # 2 (cum 31)
-    "data_ingestor_web_app_spark.operators.wave277",  # 2 (cum 33)
-    "data_ingestor_web_app_spark.operators.wave276",  # 2 (cum 35)
-    "data_ingestor_web_app_spark.operators.wave275",  # 2 (cum 37)
-    "data_ingestor_web_app_spark.operators.wave274",  # 2 (cum 39)
-    "data_ingestor_web_app_spark.llm.wave273",  # 2 (cum 41)
-    "data_ingestor_web_app_spark.operators.wave272",  # 2 (cum 43)
-    "data_ingestor_web_app_spark.operators.wave271",  # 2 (cum 45)
-    "data_ingestor_web_app_spark.operators.wave270",  # 2 (cum 47)
-    "data_ingestor_web_app_spark.operators.wave269",  # 2 (cum 49)
-    "data_ingestor_web_app_spark.operators.wave267",  # 1 (cum 50)
-    # --- r7 window (waves 135-159, driver-checked in r7) demoted ---
-    "data_ingestor_web_app_spark.operators.wave135",
-    "data_ingestor_web_app_spark.operators.wave136",
-    "data_ingestor_web_app_spark.operators.wave137",
-    "data_ingestor_web_app_spark.operators.wave138",
-    "data_ingestor_web_app_spark.llm.wave139",
-    "data_ingestor_web_app_spark.operators.wave140",
-    "data_ingestor_web_app_spark.operators.wave142",
-    "data_ingestor_web_app_spark.operators.wave143",
-    "data_ingestor_web_app_spark.operators.wave144",
-    "data_ingestor_web_app_spark.operators.wave145",
-    "data_ingestor_web_app_spark.operators.wave146",
-    "data_ingestor_web_app_spark.operators.wave147",
-    "data_ingestor_web_app_spark.llm.wave148",
-    "data_ingestor_web_app_spark.llm.wave149",
-    "data_ingestor_web_app_spark.functions.wave150",
-    "data_ingestor_web_app_spark.operators.wave151",
-    "data_ingestor_web_app_spark.operators.wave152",
-    "data_ingestor_web_app_spark.llm.wave153",
-    "data_ingestor_web_app_spark.llm.wave154",
-    "data_ingestor_web_app_spark.functions.wave155",
-    "data_ingestor_web_app_spark.operators.wave156",
-    "data_ingestor_web_app_spark.operators.wave157",
-    "data_ingestor_web_app_spark.llm.wave159",
-    # --- r6 window (waves 116-134, driver-checked in r6) demoted ---
-    "data_ingestor_web_app_spark.operators.wave116",
-    "data_ingestor_web_app_spark.operators.wave117",
-    "data_ingestor_web_app_spark.operators.wave118",
-    "data_ingestor_web_app_spark.operators.wave119",
-    "data_ingestor_web_app_spark.operators.wave120",
-    "data_ingestor_web_app_spark.operators.wave121",
-    "data_ingestor_web_app_spark.operators.wave122",
-    "data_ingestor_web_app_spark.llm.wave123",
-    "data_ingestor_web_app_spark.operators.wave124",
-    "data_ingestor_web_app_spark.operators.wave125",
-    "data_ingestor_web_app_spark.operators.wave126",
-    "data_ingestor_web_app_spark.operators.wave127",
-    "data_ingestor_web_app_spark.operators.wave128",
-    "data_ingestor_web_app_spark.operators.wave129",
-    "data_ingestor_web_app_spark.operators.wave130",
-    "data_ingestor_web_app_spark.operators.wave131",
-    "data_ingestor_web_app_spark.operators.wave133",
-    "data_ingestor_web_app_spark.operators.wave134",
-    # --- everything below has either been driver-checked (r1-r5) or
-    #     sits outside the 50-slot sample window ---
-    "data_ingestor_web_app_spark.llm.pipeline_extra",
-    "data_ingestor_web_app_spark.operators.recursive",
-    "data_ingestor_web_app_spark.operators.iterative",
-    "data_ingestor_web_app_spark.functions.variant",
-    "data_ingestor_web_app_spark.operators.fuzzy",
-    "data_ingestor_web_app_spark.operators.tpch_final",
-    "data_ingestor_web_app_spark.operators.profiling",
-    "data_ingestor_web_app_spark.operators.modeling",
-    "data_ingestor_web_app_spark.operators.admission",
-    "data_ingestor_web_app_spark.functions.arrow_boundary",
-    "data_ingestor_web_app_spark.operators.interval_join",
-    "data_ingestor_web_app_spark.operators.maintenance",
-    "data_ingestor_web_app_spark.operators.pruning",
-    "data_ingestor_web_app_spark.operators.zorder",
-    "data_ingestor_web_app_spark.operators.temporal",
-    "data_ingestor_web_app_spark.operators.rollups",
-    "data_ingestor_web_app_spark.operators.wave112",
-    "data_ingestor_web_app_spark.operators.wave113",
-    "data_ingestor_web_app_spark.operators.wave114",
-    "data_ingestor_web_app_spark.operators.wave115",
-    "data_ingestor_web_app_spark.llm.multimodal",
-    "data_ingestor_web_app_spark.operators.tpch_extra",
-    "data_ingestor_web_app_spark.llm.vector_extra",
-    "data_ingestor_web_app_spark.operators.events_analytics",
-    "data_ingestor_web_app_spark.operators.timeseries",
-    "data_ingestor_web_app_spark.llm.corpus_quality",
-    "data_ingestor_web_app_spark.operators.warehouse",
-    "data_ingestor_web_app_spark.operators.tpch_more",
-    "data_ingestor_web_app_spark.llm.text_extra",
-    "data_ingestor_web_app_spark.operators.upsert",
-    "data_ingestor_web_app_spark.functions.collation",
-    "data_ingestor_web_app_spark.operators.dq",
-    "data_ingestor_web_app_spark.llm.vector_pq",
-    "data_ingestor_web_app_spark.operators.experiments",
-    "data_ingestor_web_app_spark.operators.markov",
-    "data_ingestor_web_app_spark.operators.evolution",
-    "data_ingestor_web_app_spark.streaming.extra",
-    "data_ingestor_web_app_spark.llm.mixture",
-    "data_ingestor_web_app_spark.operators.spatial",
-    "data_ingestor_web_app_spark.operators.stickiness",
-    "data_ingestor_web_app_spark.llm.simhash_pairs",
-    "data_ingestor_web_app_spark.operators.robustness",
-    "data_ingestor_web_app_spark.llm.canonical",
-    "data_ingestor_web_app_spark.llm.lm_score",
-    "data_ingestor_web_app_spark.llm.incremental",
-    "data_ingestor_web_app_spark.functions.regex_family",
-    "data_ingestor_web_app_spark.operators.changepoint",
-    "data_ingestor_web_app_spark.operators.information",
-    "data_ingestor_web_app_spark.streaming.cdc",
-    "data_ingestor_web_app_spark.operators.conversion",
-    "data_ingestor_web_app_spark.operators.streaks",
-    "data_ingestor_web_app_spark.operators.audits",
-    "data_ingestor_web_app_spark.llm.span_corruption",
-    "data_ingestor_web_app_spark.functions.codecs_fn",
-    "data_ingestor_web_app_spark.sources.payload_source",
-    "data_ingestor_web_app_spark.operators.extras",
-    "data_ingestor_web_app_spark.operators.scans",
-    "data_ingestor_web_app_spark.operators.joins",
-    "data_ingestor_web_app_spark.operators.windows",
-    "data_ingestor_web_app_spark.functions.scalar",
-    "data_ingestor_web_app_spark.ingest.records",
-    "data_ingestor_web_app_spark.streaming.queries",
-    "data_ingestor_web_app_spark.llm.dedup",
-    "data_ingestor_web_app_spark.llm.similarity",
-    "data_ingestor_web_app_spark.llm.text",
-    "data_ingestor_web_app_spark.operators.tpch",
-    "data_ingestor_web_app_spark.operators.filters",
-    "data_ingestor_web_app_spark.operators.aggregates",
-    "data_ingestor_web_app_spark.operators.setops",
-    "data_ingestor_web_app_spark.operators.wave30",
-    "data_ingestor_web_app_spark.operators.wave31",
-    "data_ingestor_web_app_spark.operators.wave32",
-    "data_ingestor_web_app_spark.operators.wave33",
-    "data_ingestor_web_app_spark.operators.wave34",
-    "data_ingestor_web_app_spark.llm.wave35",
-    "data_ingestor_web_app_spark.operators.wave36",
-    "data_ingestor_web_app_spark.operators.wave37",
-    "data_ingestor_web_app_spark.operators.wave38",
-    "data_ingestor_web_app_spark.operators.wave39",
-    "data_ingestor_web_app_spark.operators.wave40",
-    "data_ingestor_web_app_spark.operators.wave41",
-    "data_ingestor_web_app_spark.operators.wave42",
-    "data_ingestor_web_app_spark.operators.wave43",
-    "data_ingestor_web_app_spark.llm.wave44",
-    "data_ingestor_web_app_spark.streaming.wave45",
-    "data_ingestor_web_app_spark.operators.wave46",
-    "data_ingestor_web_app_spark.ingest.wave47",
-    "data_ingestor_web_app_spark.streaming.wave48",
-    "data_ingestor_web_app_spark.operators.wave49",
-    "data_ingestor_web_app_spark.operators.wave50",
-    "data_ingestor_web_app_spark.streaming.wave51",
-    "data_ingestor_web_app_spark.operators.wave52",
-    "data_ingestor_web_app_spark.operators.wave53",
-    "data_ingestor_web_app_spark.operators.wave54",
-    "data_ingestor_web_app_spark.operators.wave55",
-    "data_ingestor_web_app_spark.operators.wave56",
-    "data_ingestor_web_app_spark.operators.wave57",
-    "data_ingestor_web_app_spark.operators.wave58",
-    "data_ingestor_web_app_spark.operators.wave59",
-    "data_ingestor_web_app_spark.operators.wave60",
-    "data_ingestor_web_app_spark.operators.wave61",
-    "data_ingestor_web_app_spark.streaming.wave62",
-    "data_ingestor_web_app_spark.llm.wave62b",
-    "data_ingestor_web_app_spark.llm.wave63",
-    "data_ingestor_web_app_spark.operators.wave64",
-    "data_ingestor_web_app_spark.streaming.wave65",
-    "data_ingestor_web_app_spark.operators.wave65b",
-    "data_ingestor_web_app_spark.operators.wave66",
-    "data_ingestor_web_app_spark.operators.wave67",
-    "data_ingestor_web_app_spark.operators.wave68",
-    "data_ingestor_web_app_spark.operators.wave69",
-    "data_ingestor_web_app_spark.operators.wave70",
-    "data_ingestor_web_app_spark.llm.wave71",
-    "data_ingestor_web_app_spark.operators.wave72",
-    "data_ingestor_web_app_spark.operators.wave73",
-    "data_ingestor_web_app_spark.operators.wave74",
-    "data_ingestor_web_app_spark.llm.wave75",
-    "data_ingestor_web_app_spark.operators.wave76",
-    "data_ingestor_web_app_spark.operators.wave77",
-    "data_ingestor_web_app_spark.operators.wave78",
-    "data_ingestor_web_app_spark.operators.wave79",
-    "data_ingestor_web_app_spark.operators.wave80",
-    "data_ingestor_web_app_spark.operators.wave81",
-    "data_ingestor_web_app_spark.operators.wave82",
-    "data_ingestor_web_app_spark.operators.wave83",
-    "data_ingestor_web_app_spark.operators.wave84",
-    "data_ingestor_web_app_spark.operators.wave85",
-    "data_ingestor_web_app_spark.operators.wave86",
-    "data_ingestor_web_app_spark.operators.wave87",
-    "data_ingestor_web_app_spark.operators.wave88",
-    "data_ingestor_web_app_spark.operators.wave89",
-    "data_ingestor_web_app_spark.operators.wave90",
-    "data_ingestor_web_app_spark.operators.wave91",
-    "data_ingestor_web_app_spark.operators.wave92",
-    "data_ingestor_web_app_spark.operators.wave93",
-    "data_ingestor_web_app_spark.operators.wave94",
-    "data_ingestor_web_app_spark.operators.wave95",
-    "data_ingestor_web_app_spark.operators.wave96",
-    "data_ingestor_web_app_spark.operators.wave97",
-    "data_ingestor_web_app_spark.operators.wave98",
-    "data_ingestor_web_app_spark.operators.wave99",
-    "data_ingestor_web_app_spark.operators.wave100",
-    "data_ingestor_web_app_spark.operators.wave101",
-    "data_ingestor_web_app_spark.operators.wave102",
-    "data_ingestor_web_app_spark.operators.wave103",
-    "data_ingestor_web_app_spark.operators.wave104",
-    "data_ingestor_web_app_spark.operators.wave105",
-    "data_ingestor_web_app_spark.operators.wave106",
-    "data_ingestor_web_app_spark.operators.wave107",
-    "data_ingestor_web_app_spark.operators.wave108",
-    "data_ingestor_web_app_spark.operators.wave109",
-    "data_ingestor_web_app_spark.operators.wave110",
-    "data_ingestor_web_app_spark.operators.wave111",
-    "data_ingestor_web_app_spark.streaming.wave122",
-    "data_ingestor_web_app_spark.streaming.wave124",
-    "data_ingestor_web_app_spark.streaming.wave127",
-    "data_ingestor_web_app_spark.streaming.wave132",
-    "data_ingestor_web_app_spark.sources.wave141",
-    "data_ingestor_web_app_spark.operators.wave158",
-    "data_ingestor_web_app_spark.operators.wave160",
-    "data_ingestor_web_app_spark.operators.wave161",
-    "data_ingestor_web_app_spark.operators.wave162",
-    "data_ingestor_web_app_spark.operators.wave163",
-    "data_ingestor_web_app_spark.operators.wave164",
-    "data_ingestor_web_app_spark.operators.wave165",
-    "data_ingestor_web_app_spark.operators.wave166",
-    "data_ingestor_web_app_spark.llm.wave167",
-    "data_ingestor_web_app_spark.operators.wave168",
-    "data_ingestor_web_app_spark.llm.wave169",
-    "data_ingestor_web_app_spark.operators.wave170",
-    "data_ingestor_web_app_spark.operators.wave171",
-    "data_ingestor_web_app_spark.operators.wave172",
-    "data_ingestor_web_app_spark.operators.wave173",
-    "data_ingestor_web_app_spark.operators.wave174",
-    "data_ingestor_web_app_spark.functions.wave175",
-    "data_ingestor_web_app_spark.llm.wave176",
-    "data_ingestor_web_app_spark.operators.wave177",
-    "data_ingestor_web_app_spark.operators.wave178",
-    "data_ingestor_web_app_spark.llm.wave179",
-    "data_ingestor_web_app_spark.operators.wave180",
-    "data_ingestor_web_app_spark.llm.wave181",
-    "data_ingestor_web_app_spark.llm.wave182",
-    "data_ingestor_web_app_spark.llm.wave183",
-    "data_ingestor_web_app_spark.operators.wave184",
-    "data_ingestor_web_app_spark.operators.wave185",
-    "data_ingestor_web_app_spark.operators.wave186",
-    "data_ingestor_web_app_spark.operators.wave187",
-    "data_ingestor_web_app_spark.operators.wave188",
-    "data_ingestor_web_app_spark.operators.wave189",
-    "data_ingestor_web_app_spark.operators.wave190",
-    "data_ingestor_web_app_spark.operators.wave191",
-    "data_ingestor_web_app_spark.operators.wave192",
-    "data_ingestor_web_app_spark.operators.wave193",
-    "data_ingestor_web_app_spark.operators.wave194",
-    "data_ingestor_web_app_spark.operators.wave195",
-    "data_ingestor_web_app_spark.operators.wave196",
-    "data_ingestor_web_app_spark.operators.wave197",
-    "data_ingestor_web_app_spark.operators.wave198",
-    "data_ingestor_web_app_spark.operators.wave199",
-    "data_ingestor_web_app_spark.operators.wave200",
-    "data_ingestor_web_app_spark.operators.wave201",
-    "data_ingestor_web_app_spark.operators.wave202",
-    "data_ingestor_web_app_spark.operators.wave203",
-    "data_ingestor_web_app_spark.operators.wave204",
-    "data_ingestor_web_app_spark.operators.wave205",
-    "data_ingestor_web_app_spark.operators.wave206",
-    "data_ingestor_web_app_spark.operators.wave207",
-    "data_ingestor_web_app_spark.operators.wave208",
-    "data_ingestor_web_app_spark.operators.wave209",
-    "data_ingestor_web_app_spark.operators.wave210",
-    "data_ingestor_web_app_spark.operators.wave211",
-    "data_ingestor_web_app_spark.operators.wave212",
-    "data_ingestor_web_app_spark.operators.wave213",
-    "data_ingestor_web_app_spark.operators.wave214",
-    "data_ingestor_web_app_spark.operators.wave215",
-    "data_ingestor_web_app_spark.operators.wave216",
-    "data_ingestor_web_app_spark.operators.wave217",
-    "data_ingestor_web_app_spark.operators.wave218",
-    "data_ingestor_web_app_spark.operators.wave219",
-    "data_ingestor_web_app_spark.operators.wave220",
-    "data_ingestor_web_app_spark.operators.wave221",
-    "data_ingestor_web_app_spark.operators.wave222",
-    "data_ingestor_web_app_spark.operators.wave223",
-    "data_ingestor_web_app_spark.operators.wave224",
-    "data_ingestor_web_app_spark.operators.wave225",
-    "data_ingestor_web_app_spark.operators.wave226",
-    "data_ingestor_web_app_spark.operators.wave227",
-    "data_ingestor_web_app_spark.operators.wave228",
-    "data_ingestor_web_app_spark.operators.wave229",
-    "data_ingestor_web_app_spark.operators.wave230",
-    "data_ingestor_web_app_spark.llm.wave231",
-    "data_ingestor_web_app_spark.operators.wave232",
-    "data_ingestor_web_app_spark.operators.wave233",
-    "data_ingestor_web_app_spark.operators.wave234",
-    "data_ingestor_web_app_spark.operators.wave235",
-    "data_ingestor_web_app_spark.operators.wave236",
-    "data_ingestor_web_app_spark.operators.wave237",
-    "data_ingestor_web_app_spark.operators.wave238",
-    "data_ingestor_web_app_spark.operators.wave239",
-    "data_ingestor_web_app_spark.operators.wave240",
-    "data_ingestor_web_app_spark.llm.wave241",
-    "data_ingestor_web_app_spark.operators.wave242",
-    "data_ingestor_web_app_spark.operators.wave243",
-    "data_ingestor_web_app_spark.operators.wave244",
-    "data_ingestor_web_app_spark.operators.wave245",
-    "data_ingestor_web_app_spark.operators.wave246",
-    "data_ingestor_web_app_spark.operators.wave247",
-    "data_ingestor_web_app_spark.operators.wave248",
-    "data_ingestor_web_app_spark.operators.wave249",
-    "data_ingestor_web_app_spark.operators.wave250",
-    "data_ingestor_web_app_spark.operators.wave251",
-    "data_ingestor_web_app_spark.operators.wave252",
-    "data_ingestor_web_app_spark.llm.wave253",
-    "data_ingestor_web_app_spark.operators.wave254",
-    "data_ingestor_web_app_spark.operators.wave255",
-    "data_ingestor_web_app_spark.llm.wave256",
-    "data_ingestor_web_app_spark.llm.wave257",
-    "data_ingestor_web_app_spark.operators.wave258",
-    "data_ingestor_web_app_spark.operators.wave259",
-    "data_ingestor_web_app_spark.operators.wave260",
-    "data_ingestor_web_app_spark.operators.wave261",
-    "data_ingestor_web_app_spark.operators.wave262",
-    "data_ingestor_web_app_spark.operators.wave263",
-    "data_ingestor_web_app_spark.operators.wave264",
-    "data_ingestor_web_app_spark.operators.wave265",
-    "data_ingestor_web_app_spark.llm.wave266",
-    "data_ingestor_web_app_spark.operators.wave268",
-    "data_ingestor_web_app_spark.operators.wave338",  # effect sizes/life table/visibility
-    "data_ingestor_web_app_spark.operators.wave340",  # breslow-day/wkappa/bws
-    "data_ingestor_web_app_spark.operators.wave341",  # haversine/polygon/hilbert
-    "data_ingestor_web_app_spark.operators.wave343",  # MUS sampling / CORDIC
-    "data_ingestor_web_app_spark.operators.wave344",  # EDD/WSPT/vickrey
-    "data_ingestor_web_app_spark.operators.wave345",  # simrank
-    "data_ingestor_web_app_spark.operators.wave346",  # phase dispersion
-    "data_ingestor_web_app_spark.operators.wave347",  # thurstone
-    "data_ingestor_web_app_spark.operators.wave348",  # DF/KPSS/cochrane-orcutt
-    "data_ingestor_web_app_spark.operators.wave349",  # VAR1 / quandt sup-F
-    "data_ingestor_web_app_spark.functions.wave350",  # lambda HOF shelf
-    "data_ingestor_web_app_spark.operators.wave351",  # che-LRU / quorum
-    "data_ingestor_web_app_spark.operators.wave352",  # GSP-VCG / fixed effects
-    "data_ingestor_web_app_spark.operators.wave353",  # IDW / clark-evans
-    "data_ingestor_web_app_spark.operators.wave354",  # ROC convex hull
-    "data_ingestor_web_app_spark.operators.wave355",  # power indices extra
-    "data_ingestor_web_app_spark.operators.wave356",  # hotelling T2
-    "data_ingestor_web_app_spark.llm.wave357",  # viterbi
-    "data_ingestor_web_app_spark.operators.wave358",  # CRDT / merkle
-    "data_ingestor_web_app_spark.operators.wave359",  # bin packing bounds
-    "data_ingestor_web_app_spark.operators.wave360",  # ZIP / beta-binomial MoM
-    # --- round-9 additions (behind the 50-slot window) ---
-    "data_ingestor_web_app_spark.operators.wave362",  # elo replay / littlewood
-    "data_ingestor_web_app_spark.operators.wave363",  # kemeny / tornqvist
-    "data_ingestor_web_app_spark.operators.wave364",  # fligner-killeen / EMSR-b
-    "data_ingestor_web_app_spark.operators.wave365",  # DDM drift / binary segmentation
-    "data_ingestor_web_app_spark.operators.wave366",  # plackett-luce integer MM
-    "data_ingestor_web_app_spark.llm.wave367",  # exact-substring dedup / games-howell
-    "data_ingestor_web_app_spark.operators.wave368",  # sinkhorn OT / welch anova
-    "data_ingestor_web_app_spark.llm.wave369",  # watermark detection / mauve frontier
-    "data_ingestor_web_app_spark.operators.wave370",  # k-truss / chrF
-    "data_ingestor_web_app_spark.operators.wave371",  # bass diffusion
-    # --- round-10 additions (behind the 50-slot window) ---
-    "data_ingestor_web_app_spark.operators.wave372",  # german tank / vargha-delaney
-    "data_ingestor_web_app_spark.operators.wave373",  # kadane / savitzky-golay
-    "data_ingestor_web_app_spark.operators.wave374",  # ripley K / join counts
-    "data_ingestor_web_app_spark.operators.wave375",  # LB_Keogh / head-tail breaks
-    "data_ingestor_web_app_spark.operators.wave376",  # cox-stuart / xbar-R chart
-    "data_ingestor_web_app_spark.operators.wave377",  # passing-bablok / group-sequential
-    "data_ingestor_web_app_spark.operators.wave378",  # ancova / g-chart
-    "data_ingestor_web_app_spark.llm.wave379",  # ASO / canary exposure
-    "data_ingestor_web_app_spark.operators.wave380",  # isotonic PAVA / seasonal decompose
-    "data_ingestor_web_app_spark.operators.wave381",  # ARCH LM / goldfeld-quandt
-    # --- round-11 additions (behind the 50-slot window) ---
-    "data_ingestor_web_app_spark.operators.wave382",  # knox space-time / LZ76
-    "data_ingestor_web_app_spark.operators.wave383",  # seasonal kendall / double sweep
-    "data_ingestor_web_app_spark.operators.wave384",  # BOCPD integer recursion
-    "data_ingestor_web_app_spark.operators.wave385",  # seasonal sen slope
-    "data_ingestor_web_app_spark.operators.wave386",  # fano factor / higuchi FD
-    "data_ingestor_web_app_spark.operators.wave387",  # crow-AMSAA / u-chart
-    "data_ingestor_web_app_spark.streaming.wave388",  # streaming BOCPD
-]
-
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -522,55 +56,14 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver round whose WINDOW_PLAN.json block must occupy slots 1-50.
-# Bump once per round, together with regenerating WINDOW_PLAN.json
-# (python tools/window_plan.py --round N --write); tests/test_window_plan.py
-# imports this so the pin can never drift from the registry.
-DRIVER_ROUND = "r11"
-
-
-def _apply_driver_window() -> None:
-    """Rotate the committed WINDOW_PLAN.json block for DRIVER_ROUND into
-    registry slots 1-50 (dict insertion order IS the driver sample order).
-
-    Through round 10 the rotation was done by moving whole modules to the
-    front of ``_MODULES`` — possible only because each window happened to be
-    a union of complete never-checked modules. From r11 on the planned
-    windows span *partial* modules (the unchecked remainder of modules whose
-    other queries were driver-checked in earlier rounds), so the registry
-    applies the committed plan explicitly. This is deterministic and
-    auditable: the window is pinned by a committed artifact, and
-    tests/test_window_plan.py still asserts (a) realized front-50 == plan
-    and (b) zero overlap with every prior round's CORRECTNESS artifact.
-    Cross-module import side effects can no longer poison the window (the
-    r10 wave328/wave144 incident class) because the reorder runs AFTER all
-    imports."""
-    import json
-    from pathlib import Path
-
-    plan_path = Path(__file__).resolve().parent.parent / "WINDOW_PLAN.json"
-    if not plan_path.exists():  # fresh checkout without artifacts: keep order
-        return
-    window = json.loads(plan_path.read_text())["windows"].get(DRIVER_ROUND)
-    if not window:
-        return
-    missing = [n for n in window if n not in QUERIES]
-    if missing:
-        raise KeyError(
-            f"WINDOW_PLAN.json {DRIVER_ROUND} names unregistered queries "
-            f"{missing[:5]} — regenerate the plan or fix the registry"
-        )
-    front = set(window)
-    order = list(window) + [n for n in QUERIES if n not in front]
-    for d in (QUERIES, ORACLES):
-        resorted = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(resorted)
-
-
 def load_all() -> None:
-    """Import every operator module so registration side effects run, then
-    rotate the current driver window to the front (see _apply_driver_window)."""
-    for mod in _MODULES:
-        importlib.import_module(mod)
-    _apply_driver_window()
+    """Import every module of the package so each ``@query`` registers.
+
+    Modules load in sorted path order. A module that reads another
+    module's oracle at import time imports that module itself, so the
+    registry does not depend on the order."""
+    import data_ingestor_web_app_spark as pkg
+
+    names = [m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")]
+    for name in sorted(names):
+        importlib.import_module(name)

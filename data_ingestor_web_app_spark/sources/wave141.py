@@ -1,5 +1,5 @@
 """Wave-141: catalog/table-API surface — managed tables, SQL UDF DDL,
-global temp views, and the rate streaming source. Back-of-registry module.
+global temp views, and the rate streaming source.
 """
 
 from __future__ import annotations

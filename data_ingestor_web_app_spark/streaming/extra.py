@@ -1,9 +1,4 @@
-"""Wave-15 streaming addition: windowed top-k composed with batch rank.
-
-Registered at the back of the registry (the front-of-list streaming
-module order is load-bearing for the driver's correctness window — see
-registry._MODULES).
-"""
+"""Wave-15 streaming addition: windowed top-k composed with batch rank."""
 
 from __future__ import annotations
 
@@ -61,9 +56,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 2)
 
 
-# The import is safe here because registry._MODULES loads llm.wave159 (front
-# window block) before this back-of-list module; it only REUSES the already-
-# registered module's constants, it does not re-register anything.
+# Reuses wave159's minhash constants and oracle; it registers nothing new.
 from data_ingestor_web_app_spark.llm import wave159 as _w159
 
 

@@ -1,6 +1,6 @@
 """Wave-122 streaming member: a per-key Page-Hinkley drift detector held
-in explicit stream state. Back-of-registry module (split from the batch
-wave so streaming deps stay in the streaming package).
+in explicit stream state. Split from the batch wave so streaming deps stay in
+the streaming package.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-124 streaming member: sharded space-saving heavy-hitter sketch in
-explicit stream state. Back-of-registry module.
+explicit stream state.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Wave-127 streaming member: the R18 token-bucket admission control as a
 stateful stream, per-event decisions carried across micro-batches.
-Back-of-registry module.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Wave-132 streaming members: per-record ack via a foreach sink (R13)
-and timeout-closed sessions (GroupStateTimeout). Back-of-registry module.
+and timeout-closed sessions (GroupStateTimeout).
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Wave-388: STREAMING Bayesian online changepoint detection — the
 wave-384 integer BOCPD recursion carried across micro-batches in explicit
-GroupState (Adams & MacKay 2007; applyInPandasWithState). Back-of-registry
-module.
+GroupState (Adams & MacKay 2007; applyInPandasWithState).
 """
 
 from __future__ import annotations

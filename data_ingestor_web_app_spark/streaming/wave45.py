@@ -5,7 +5,6 @@ stream_scd2_history extends the incremental==batch discipline
 hardest common lakehouse maintenance job — close the open version,
 append the new one, never rewrite history — maintained per micro-batch
 and hash-checked against the one-shot batch derivation.
-Registered at the back of registry._MODULES.
 """
 
 from __future__ import annotations

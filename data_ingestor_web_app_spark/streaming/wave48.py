@@ -10,8 +10,7 @@ unmatched rows would never flush. The replay therefore appends two
 far-future SENTINEL batches — the first advances the watermark past all
 real data, the second triggers the state eviction that emits the
 remaining NULL rows (watermarks advance between batches, and eviction
-runs in the batch AFTER the advance). Registered at the back of
-registry._MODULES.
+runs in the batch AFTER the advance).
 """
 
 from __future__ import annotations

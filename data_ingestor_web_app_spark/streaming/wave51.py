@@ -1,5 +1,4 @@
-"""Wave-51: UPDATE output mode semantics. Registered at the back of
-registry._MODULES.
+"""Wave-51: UPDATE output mode semantics.
 """
 
 from __future__ import annotations

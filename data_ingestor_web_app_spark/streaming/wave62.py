@@ -1,7 +1,7 @@
 """Wave-62 (streaming): stream-static join against a dimension that
 REFRESHES between micro-batches — foreachBatch re-resolves the dim
 version, proving per-batch re-broadcast semantics hash-exactly against
-a batch mirror. Back-of-registry module.
+a batch mirror.
 """
 
 from __future__ import annotations

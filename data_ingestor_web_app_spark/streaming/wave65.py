@@ -1,6 +1,6 @@
 """Wave-65 (streaming): batch-backfill + streaming-tail cutover with
 overlap dedup — the kappa-architecture migration move, hash-exact
-against the batch truth. Back-of-registry module.
+against the batch truth.
 """
 
 from __future__ import annotations

@@ -13,22 +13,40 @@ from data_ingestor_web_app_spark.ingest.records import _go_quote, go_quote_udf
 
 
 def test_go_quote_goldens():
-    # goldens match Go: fmt.Sprintf("%q", s)
-    assert _go_quote("test data") == '"test data"'
-    assert _go_quote('say "hi"') == '"say \\"hi\\""'
-    assert _go_quote("a\\b") == '"a\\\\b"'
-    assert _go_quote("tab\there\nnewline") == '"tab\\there\\nnewline"'
-    assert _go_quote("\x00\x1f") == '"\\x00\\x1f"'
-    assert _go_quote("héllo") == '"héllo"'  # printable unicode stays literal
-    assert _go_quote("") == '""'
+    # goldens match Go: fmt.Sprintf("%q", b) over the payload bytes
+    assert _go_quote(b"test data") == '"test data"'
+    assert _go_quote(b'say "hi"') == '"say \\"hi\\""'
+    assert _go_quote(b"a\\b") == '"a\\\\b"'
+    assert _go_quote(b"tab\there\nnewline") == '"tab\\there\\nnewline"'
+    assert _go_quote(b"\x00\x1f") == '"\\x00\\x1f"'
+    assert _go_quote("héllo".encode()) == '"héllo"'  # printable unicode stays literal
+    assert _go_quote(b"") == '""'
+    # bytes that are not valid UTF-8 get Go's per-byte \xNN escape
+    assert _go_quote(b"\xff\x00\x10\x80GPS") == '"\\xff\\x00\\x10\\x80GPS"'
+    assert _go_quote("é".encode()[:1]) == '"\\xc3"'
+    # non-printable runes above U+007F use \u, as strconv.Quote does
+    assert _go_quote("\u0085\u00a0".encode()) == '"\\u0085\\u00a0"'
 
 
 def test_go_quote_udf_matches_python(spark):
-    vals = ["test data", 'q"uote', "a\tb", "", "ünïcode"]
-    df = spark.createDataFrame([(v,) for v in vals], "s string")
-    out = {r["s"]: r["q"] for r in df.select("s", go_quote_udf("s").alias("q")).collect()}
-    for v in vals:
-        assert out[v] == _go_quote(v)
+    vals = [b"test data", b'q"uote', b"a\tb", b"", "ünïcode".encode(), b"\xff\x00\x10\x80GPS"]
+    df = spark.createDataFrame([(i, bytearray(v)) for i, v in enumerate(vals)], "i int, b binary")
+    out = {r["i"]: r["q"] for r in df.select("i", go_quote_udf("b").alias("q")).collect()}
+    for i, v in enumerate(vals):
+        assert out[i] == _go_quote(v)
+
+
+def test_udf_quote_cuts_at_byte_40(spark, tmp_path):
+    """udf_quote quotes the first 40 payload BYTES: a two-byte rune that
+    straddles byte 40 leaves its lead byte, which Go prints as \\xNN."""
+    from data_ingestor_web_app_spark.ingest.records import udf_quote
+
+    text = "a" * 39 + "é"
+    spark.createDataFrame([(1, text)], "doc_id long, text string").write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    (row,) = udf_quote(spark, str(tmp_path)).collect()
+    assert row["binary_data_string"] == '"' + "a" * 39 + '\\xc3"'
 
 
 def test_ingest_record_golden(spark):

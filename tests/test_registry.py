@@ -3,6 +3,11 @@ are well-formed, and the fast queries produce stable non-empty output."""
 
 from __future__ import annotations
 
+import json
+import subprocess
+import sys
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -66,6 +71,32 @@ def test_inventory_complete():
 def test_oracles_reference_registered_queries():
     orphans = set(ORACLES) - set(QUERIES)
     assert not orphans
+
+
+_REVERSE_IMPORT = """
+import importlib, json, pkgutil, sys
+sys.path.insert(0, sys.argv[1])
+import data_ingestor_web_app_spark as pkg
+from data_ingestor_web_app_spark import registry
+names = [m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")]
+for name in sorted(names, reverse=True):
+    importlib.import_module(name)
+out = {"queries": {n: f"{f.__module__}.{f.__qualname__}" for n, f in registry.QUERIES.items()},
+       "oracles": registry.ORACLES}
+open(sys.argv[2], "w").write(json.dumps(out))
+"""
+
+
+def test_registration_does_not_depend_on_import_order(tmp_path):
+    """Importing the package modules in reverse order registers the same
+    queries and oracles as load_all(): a module that embeds another
+    module's oracle imports that module itself."""
+    out = tmp_path / "registry.json"
+    root = str(Path(__file__).resolve().parent.parent)
+    subprocess.run([sys.executable, "-c", _REVERSE_IMPORT, root, str(out)], check=True, timeout=300)
+    got = json.loads(out.read_text())
+    assert got["queries"] == {n: f"{f.__module__}.{f.__qualname__}" for n, f in QUERIES.items()}
+    assert got["oracles"] == ORACLES
 
 
 def test_oracles_parse_in_duckdb():

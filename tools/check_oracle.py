@@ -17,8 +17,11 @@ import math
 import sys
 import time
 from datetime import date, datetime
+from pathlib import Path
 
 import duckdb
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def canon(v):
@@ -129,7 +132,7 @@ def main():
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(ROOT))
     import __spark_entry__ as entry_mod
 
     queries = entry_mod.queries()

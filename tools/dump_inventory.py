@@ -6,8 +6,10 @@ drift from the code. Run: python tools/dump_inventory.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from data_ingestor_web_app_spark import registry
 
@@ -41,8 +43,7 @@ def render() -> str:
 
 
 def main() -> None:
-    with open("OPERATORS.md", "w") as f:
-        f.write(render())
+    (ROOT / "OPERATORS.md").write_text(render())
     print(f"wrote OPERATORS.md ({len(registry.QUERIES)} queries)")
 
 

@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from data_ingestor_web_app_spark import registry
 from data_ingestor_web_app_spark.plans.inspect import final_plan, plan_properties

@@ -7,8 +7,10 @@ actions fired while building the plan. VERDICT r8 item 7 feeder.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, ".")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import SparkSession
 # PySpark 4: pyspark.sql.DataFrame is the abstract facade; actions

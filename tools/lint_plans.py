@@ -13,9 +13,11 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from data_ingestor_web_app_spark import registry
 from data_ingestor_web_app_spark.plans.lint import lint_query

@@ -12,10 +12,12 @@ import argparse
 import json
 import os
 import sys
+from pathlib import Path
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 

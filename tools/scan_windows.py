@@ -6,8 +6,10 @@ Run: python tools/scan_windows.py
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from data_ingestor_web_app_spark import registry
 from data_ingestor_web_app_spark.plans.window_audit import audit_plan
