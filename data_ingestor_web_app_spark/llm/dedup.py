@@ -295,9 +295,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark cannot split, so every per-row stage would run on one task. A
     # round-robin repartition restores scan parallelism; on a real
     # multi-split corpus the scan already has the parallelism and this
-    # exchange is the first shuffle the collapse needs anyway.
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    # exchange is the first shuffle the collapse needs anyway. A null text
+    # has no token set: its set key would be the hash of a null array, the
+    # same for every such document, and would pair them all as duplicates.
+    d = (
+        table(spark, sf_dir, "documents")
+        .where(F.col("text").isNotNull())
+        .repartition(spark.sparkContext.defaultParallelism)
     )
     toks = F.array_distinct(F.split("text", " "))
     skey = F.struct(

@@ -1,13 +1,40 @@
-"""Wave-159: MinHash+LSH with a DuckDB-replayable hash family — promotes
-the flagship near-dup pipeline from rows-only to hash-exact verification.
+"""Exact MinHash-LSH near-duplicate detection on two Arrow kernels.
+
+The hash family is one that DuckDB can replay bit for bit, so the pair set
+is checked exactly against the oracle below.
+
+Signature kernel (``minhash_signatures``, run through ``with_minhash``).
+Each distinct token of an Arrow batch is hashed once: x = the top 60 bits
+of md5(token). The 64 Carter-Wegman values (a_s * x + b_s) mod (2^61 - 1)
+of every distinct token are computed in numpy int64 with the Mersenne split
+of ``cw_hashes``, where every intermediate stays below 2^63. A document's
+signature is the elementwise minimum over its tokens, one segmented
+``np.minimum.reduceat`` per hash.
+
+Pair kernel (``lsh_pairs``). Band rows arrive hash-partitioned on
+(band, band signature) and sorted, so every LSH bucket is a run of
+consecutive rows. For each bucket of k >= 2 representatives the kernel
+maps their tokens onto a vocabulary local to the bucket and multiplies the
+k x V incidence matrix by its transpose, which gives every pair's exact
+intersection size. The product runs in row tiles of at most ``_TILE_CELLS``
+cells, so no bucket builds a k x k matrix. A
+pair is kept in the bucket of its first agreeing band only, and only if it
+passes the integer Jaccard test 19 * ix >= 9 * (la + lb), the exact form of
+ix / (la + lb - ix) >= 0.9. The kernel emits both member lists, so doc
+pairs come from two ``explode``s without joining back to the documents.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from data_ingestor_web_app_spark.io import table
 from data_ingestor_web_app_spark.registry import query
@@ -15,8 +42,8 @@ from data_ingestor_web_app_spark.registry import query
 # Carter-Wegman universal family over the Mersenne prime 2^61-1:
 # h_s(x) = (a_s * x + b_s) mod P, with x = the top 60 bits of md5(token).
 # md5 exists in BOTH engines (DuckDB has no xxhash64), 60-bit x keeps the
-# 128-bit product under DECIMAL(38)/HUGEINT range, and modular integer
-# arithmetic is exact — so Spark and DuckDB compute bit-identical
+# 128-bit product under DuckDB's HUGEINT range, and modular integer
+# arithmetic is exact — so numpy and DuckDB compute bit-identical
 # signatures with no float anywhere.
 _P = (1 << 61) - 1
 _N_HASHES = 64
@@ -91,191 +118,267 @@ _ORACLE = f"""
     SELECT doc_a, doc_b, jaccard FROM within
     """
 
-# r12: the multiply-mod runs in pure 64-bit integer arithmetic instead of
-# DECIMAL(38) (Java BigDecimal — it was ~10 s of task CPU at sf0.1, the
-# single hottest stage in the bench). P = 2^61-1 is a Mersenne prime, so
-# (a*x + b) mod P decomposes exactly into BIGINT ops (guide §4 "per-task
-# work"): split a = a1*2^31 + a0 (constants, precomputed below) and
-# x = x1*2^31 + x0 (x < 2^60), then
+# The Mersenne split of (a * x + b) mod P in int64. With a = a1*2^31 + a0
+# and x = x1*2^31 + x0 (x < 2^60),
 #   a*x = a1*x1*2^62 + (a1*x0 + a0*x1)*2^31 + a0*x0
-# and each term reduces with 2^61 ≡ 1 (mod P):
-#   a1*x1*2^62        ≡ 2*a1*x1                          (< 2^60)
-#   m*2^31, m=u*2^30+v ≡ u + v*2^31                      (< 2^61+2^32)
-#   t = a0*x0          ≡ (t & P) + (t >> 61)             (< 2^61+2)
-# Every intermediate and the final sum (+ b < 2^61) stays under 2^63 —
-# no overflow, bit-identical values to the DECIMAL form (integers are
-# exact), so the oracle and every signature are unchanged.
-_A1_SQL = "array(" + ",".join(f"{a >> 31}L" for a in _A) + ")"
-_A0_SQL = "array(" + ",".join(f"{a & 0x7FFFFFFF}L" for a in _A) + ")"
-_B_SQL = "array(" + ",".join(f"{b}L" for b in _B) + ")"
+# and each term reduces with 2^61 = 1 (mod P):
+#   a1*x1*2^62         = 2*a1*x1                  (< 2^60)
+#   m*2^31, m=u*2^30+v = u + v*2^31               (< 2^61 + 2^32)
+#   t = a0*x0          = (t & P) + (t >> 61)      (< 2^61 + 2)
+# so the sum plus b (< 2^61) stays below 2^63 before the final mod.
+_ROWS_PER_BAND = _N_HASHES // _N_BANDS
+_A1 = np.array([a >> 31 for a in _A], dtype=np.int64)
+_A0 = np.array([a & 0x7FFFFFFF for a in _A], dtype=np.int64)
+_B0 = np.array(_B, dtype=np.int64)
+# cells of one tile of the pair kernel's intersection product (float32)
+_TILE_CELLS = 1 << 22
 
-# Single-pass fold (same shape as llm/dedup.py's _minhash_from_tokens): one
-# walk over the token array; each token contributes its 64 exact modular
-# hashes; zip_with(least) folds them into the running minimum vector. One
-# md5 per token (not per token x seed) — the seed family is 64 cheap
-# Mersenne multiply-mod probes on the shared 60-bit digest.
-_MINHASH_FOLD = f"""
-    aggregate(
-      transform(toks,
-                t -> CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT)),
-      array_repeat(cast({_P} as bigint), {_N_HASHES}),
-      (acc, x) -> zip_with(
-          acc,
-          transform(sequence(0, {_N_HASHES - 1}),
-                    s -> pmod(
-                           2L * element_at({_A1_SQL}, s + 1)
-                               * shiftright(x, 31)
-                           + shiftright(
-                               element_at({_A1_SQL}, s + 1) * (x & 2147483647L)
-                               + element_at({_A0_SQL}, s + 1)
-                                   * shiftright(x, 31),
-                               30)
-                           + ((element_at({_A1_SQL}, s + 1) * (x & 2147483647L)
-                               + element_at({_A0_SQL}, s + 1)
-                                   * shiftright(x, 31))
-                              & 1073741823L) * 2147483648L
-                           + ((element_at({_A0_SQL}, s + 1) * (x & 2147483647L))
-                              & {_P}L)
-                           + shiftright(
-                               element_at({_A0_SQL}, s + 1) * (x & 2147483647L),
-                               61)
-                           + element_at({_B_SQL}, s + 1),
-                           {_P}L)),
-          (a, h) -> least(a, h))
+
+def cw_hashes(x: np.ndarray) -> np.ndarray:
+    """(n,) int64 60-bit digests -> (n, 64) int64 (a_s * x + b_s) mod P."""
+    x1 = (x >> 31)[:, None]
+    x0 = (x & 0x7FFFFFFF)[:, None]
+    m = _A1 * x0 + _A0 * x1
+    t = _A0 * x0
+    h = (
+        2 * _A1 * x1
+        + (m >> 30)
+        + ((m & 0x3FFFFFFF) << 31)
+        + (t & _P)
+        + (t >> 61)
+        + _B0
     )
-    """
+    return h % _P
+
+
+def token_digests(tokens: list[str]) -> np.ndarray:
+    """Top 60 bits of md5(token): DuckDB's
+    CAST(CONCAT('0x', SUBSTR(MD5(tok), 1, 15)) AS BIGINT)."""
+    return np.fromiter(
+        (int.from_bytes(hashlib.md5(t.encode()).digest()[:8], "big") >> 4 for t in tokens),
+        dtype=np.int64,
+        count=len(tokens),
+    )
+
+
+def minhash_signatures(toks: pa.Array) -> pa.Array:
+    """list<string> -> list<int64> of the 64 minhashes per row; null where
+    the token list is null or empty."""
+    n = len(toks)
+    flat = pc.list_flatten(toks)
+    out = np.zeros((n, _N_HASHES), dtype=np.int64)
+    valid = np.zeros(n, dtype=bool)
+    if len(flat):
+        enc = pc.dictionary_encode(flat)
+        codes = enc.indices.to_numpy()
+        per_hash = cw_hashes(token_digests(enc.dictionary.to_pylist())).T.copy()
+        parent = pc.list_parent_indices(toks).to_numpy()
+        starts = np.flatnonzero(np.r_[True, parent[1:] != parent[:-1]])
+        rows = parent[starts]
+        for s in range(_N_HASHES):
+            out[rows, s] = np.minimum.reduceat(per_hash[s][codes], starts)
+        valid[rows] = True
+    return pa.ListArray.from_arrays(
+        pa.array(np.arange(0, _N_HASHES * n + 1, _N_HASHES, dtype=np.int32)),
+        pa.array(out.ravel()),
+        mask=pa.array(~valid),
+    )
+
+
+def _signature_batches(batches):
+    for b in batches:
+        yield b.append_column("mh", minhash_signatures(b.column("toks")))
+
+
+def with_minhash(df: DataFrame) -> DataFrame:
+    """``df`` plus ``mh``: the 64-value signature of its ``toks`` column."""
+    schema = StructType(df.schema.fields + [StructField("mh", ArrayType(LongType()))])
+    return df.mapInArrow(_signature_batches, schema)
+
+
+def _row_ids(x: np.ndarray) -> np.ndarray:
+    """(n, r) int64 -> (n,) int64 ids, equal exactly where rows are equal;
+    one column at a time, ids stay below n."""
+    ids = np.zeros(len(x), dtype=np.int64)
+    for c in range(x.shape[1]):
+        col = np.unique(x[:, c], return_inverse=True)[1]
+        ids = np.unique(ids * len(x) + col, return_inverse=True)[1]
+    return ids
+
+
+def _bucket_pairs(groups, band, sizes, codes, tile_cells):
+    """Rep pairs (p, q, ix) of one bucket of k reps whose first agreeing
+    band is ``band`` and with 19 * ix >= 9 * (la + lb). ``groups`` (k, 8)
+    numbers each rep's band signatures (equal ids, equal signatures),
+    ``sizes`` (k,) counts each rep's tokens and ``codes`` holds their
+    concatenated token ids."""
+    k = len(sizes)
+    _, local = np.unique(codes, return_inverse=True)
+    v = int(local.max()) + 1
+    # float32 sums of 0/1 are exact while a count stays below 2^24
+    inc = np.zeros((k, v), dtype=np.float32 if v < 1 << 24 else np.float64)
+    inc[np.repeat(np.arange(k), sizes), local] = 1
+    tile = max(1, tile_cells // k)
+    ps, qs, ixs = [], [], []
+    for r0 in range(0, k - 1, tile):
+        r1 = min(r0 + tile, k - 1)
+        # columns from r0 + 1 on: each pair once, as (row < column)
+        ix = (inc[r0:r1] @ inc[r0 + 1 :].T).astype(np.int64)
+        keep = 19 * ix >= 9 * (sizes[r0:r1, None] + sizes[None, r0 + 1 :])
+        keep &= np.arange(r0, r1)[:, None] < np.arange(r0 + 1, k)[None, :]
+        for i in range(band):
+            keep &= groups[r0:r1, i, None] != groups[None, r0 + 1 :, i]
+        p, q = np.nonzero(keep)
+        ps.append(p + r0)
+        qs.append(q + r0 + 1)
+        ixs.append(ix[p, q])
+    return np.concatenate(ps), np.concatenate(qs), np.concatenate(ixs)
+
+
+_PAIR_SCHEMA = "ids_a array<bigint>, ids_b array<bigint>, ix int, la int, lb int"
+
+
+def _bucket_keys(batch: pa.RecordBatch) -> np.ndarray:
+    """(n, 1 + rows per band) int64: each row's band and its band signature."""
+    n = batch.num_rows
+    band = batch.column("band").to_numpy().astype(np.int64)
+    mh = pc.list_flatten(batch.column("mh")).to_numpy().reshape(n, _N_BANDS, _ROWS_PER_BAND)
+    return np.column_stack([band, mh[np.arange(n), band]])
+
+
+def _pairs_in(batch: pa.RecordBatch, starts: np.ndarray, tile_cells: int):
+    """Yield the verified pairs of the buckets that start at ``starts`` in
+    ``batch`` (each runs to the next start or the end of the batch)."""
+    n = batch.num_rows
+    counts = np.diff(np.r_[starts, n])
+    multi = np.flatnonzero(counts > 1)
+    if not len(multi):
+        return
+    toks = batch.column("toks")
+    sizes = pc.list_value_length(toks).to_numpy().astype(np.int64)
+    offs = np.r_[0, np.cumsum(sizes)]
+    codes = pc.dictionary_encode(pc.list_flatten(toks)).indices.to_numpy()
+    mh = pc.list_flatten(batch.column("mh")).to_numpy().reshape(n, _N_BANDS, _ROWS_PER_BAND)
+    groups = np.column_stack([_row_ids(mh[:, i]) for i in range(_N_BANDS)])
+    band = batch.column("band").to_numpy()
+    a, b, ix = [], [], []
+    for i in multi:
+        st, en = starts[i], starts[i] + counts[i]
+        p, q, x = _bucket_pairs(
+            groups[st:en], int(band[st]), sizes[st:en], codes[offs[st] : offs[en]], tile_cells
+        )
+        a.append(p + st)
+        b.append(q + st)
+        ix.append(x)
+    a, b, ix = np.concatenate(a), np.concatenate(b), np.concatenate(ix)
+    if len(a):
+        ids = batch.column("ids")
+        yield pa.RecordBatch.from_arrays(
+            [
+                ids.take(pa.array(a)),
+                ids.take(pa.array(b)),
+                pa.array(ix.astype(np.int32)),
+                pa.array(sizes[a].astype(np.int32)),
+                pa.array(sizes[b].astype(np.int32)),
+            ],
+            ["ids_a", "ids_b", "ix", "la", "lb"],
+        )
+
+
+def _one_batch(parts: list[pa.RecordBatch]) -> pa.RecordBatch:
+    return pa.Table.from_batches(parts).combine_chunks().to_batches()[0]
+
+
+def lsh_pairs(batches, tile_cells: int = _TILE_CELLS):
+    """The pair kernel over one partition of band rows (band, toks, ids, mh)
+    sorted by bucket. A bucket may span Arrow batches: the rows of the last
+    bucket of a batch wait until a later row starts another bucket."""
+    pending: list[pa.RecordBatch] = []
+    last_key = None
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        keys = _bucket_keys(batch)
+        new = np.r_[
+            last_key is None or (keys[0] != last_key).any(),
+            (keys[1:] != keys[:-1]).any(axis=1),
+        ]
+        last_key = keys[-1]
+        starts = np.flatnonzero(new)
+        if not len(starts):
+            pending.append(batch)
+            continue
+        if pending:
+            pending.append(batch.slice(0, starts[0]))
+            yield from _pairs_in(_one_batch(pending), np.array([0]), tile_cells)
+        yield from _pairs_in(batch.slice(0, starts[-1]), starts[:-1], tile_cells)
+        pending = [batch.slice(starts[-1])]
+    if pending:
+        yield from _pairs_in(_one_batch(pending), np.array([0]), tile_cells)
 
 
 @query("dedup_minhash_lsh_exact", oracle=_ORACLE)
 def dedup_minhash_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship MinHash+LSH near-dup pipeline with a fully
-    DuckDB-replayable hash family — every stage hash-exact against the
-    oracle (r5 VERDICT item 5; this DuckDB build has no xxhash64, so the
-    family is Carter-Wegman mod 2^61-1 over a shared md5-derived 60-bit
-    token digest — exact integer arithmetic in both engines).
+    """The flagship MinHash+LSH near-dup pipeline with a DuckDB-replayable
+    hash family, hash-exact against the oracle.
 
-    Same structure as dedup_minhash_lsh (llm/dedup.py): exact-duplicate
-    token sets collapse to one representative per md5 set key; 64
-    minhashes per representative via a single-pass fold; 8 bands of 8; the
-    band-bucket self-join generates candidates; exact Jaccard >= 0.9
-    verification on representative pairs; expansion back through group
-    membership (cross pairs inherit the reps' Jaccard, within-group pairs
-    are 1.0 by identity). Candidates use the same first-matching-band
-    emission as the production variant (r11; it yields the identical pair
-    SET the old DISTINCT produced, without re-shuffling the 2.6M raw band
-    matches — the oracle mirrors the set semantics, not the dedup
-    mechanics); throughput-critical corpora use dedup_minhash_lsh
-    (xxhash64, rows-only + recall-gated).
+    Documents with the same token set collapse to one representative
+    (keyed by the md5 of the sorted set) that carries the list of its
+    doc_ids. The signature kernel gives each representative its 64
+    minhashes; 8 bands of 8 give 8 band rows per representative. The band
+    rows are hash-partitioned on (band, band signature) and sorted, and the
+    pair kernel verifies every bucket exactly. Verified representative
+    pairs expand to doc pairs through the two member lists and inherit the
+    representatives' Jaccard; members of one representative pair with
+    Jaccard 1.0. Null-text documents have no token set and pair with
+    nothing, as in the oracle. Throughput-critical corpora use
+    dedup_minhash_lsh (xxhash64, rows-only and recall-gated).
 
-    Scale shape: identical to dedup_minhash_lsh — linear signature pass,
-    band-bucketed candidate join, no all-pairs product; the only extra
-    cost is one Mersenne multiply-mod per (token, seed), still JVM-side
-    codegen."""
-    d = table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    Scale shape: one shuffle collapses the documents, one partitions the
+    band rows; a bucket of k representatives costs a k x k product in row
+    tiles, never an all-pairs product over the corpus."""
+    d = table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     toks = F.array_distinct(F.split("text", " "))
     tset = F.md5(F.concat_ws("\x1f", F.sort_array(toks)))
-    members = d.select("doc_id", tset.alias("tset")).cache()
-    # r12: the 64-hash fold and the band strings are computed PER DOC in
-    # the map-side scan stage, not per rep after the groupBy. A minhash is
-    # a min over the token SET (order-independent), and every member of a
-    # tset group has the identical set, so min_by over the per-doc
-    # signatures is bit-identical to folding the representative's array —
-    # but the heavy compute now runs at full scan parallelism instead of
-    # on the 1-2 post-shuffle tasks AQE's bytes-based coalescing left for
-    # a ~2 MB shuffle (guide §2.5: bytes are a bad proxy for CPU-dense
-    # stages; measured 3.5 s -> 0.4 s for the signature pass at sf0.1).
-    # r12: band signatures are 8-long BIGINT array slices of the signature
-    # vector instead of ':'-joined strings. The ':' join of bigints is
-    # injective, so array equality <=> string equality — the join key, the
-    # earlier-band residual check, and therefore the emitted pair SET are
-    # exactly the ones the string form produced (the oracle observes only
-    # that set) — but an 8-long comparison beats a ~160-char string
-    # compare/hash on every one of the ~1M band-bucket probes at sf0.1.
-    rows_per_band = _N_HASHES // _N_BANDS
-    mh = F.expr(_MINHASH_FOLD)
-    barr = F.array(
-        *[F.slice("mh", b * rows_per_band + 1, rows_per_band) for b in range(_N_BANDS)]
-    )
-    per_doc = (
+    reps = (
         d.select("doc_id", toks.alias("toks"), tset.alias("tset"))
-        .withColumn("mh", mh)
-        .select("doc_id", "tset", "toks", barr.alias("barr"))
-    )
-    sig = (
-        per_doc.groupBy("tset")
-        .agg(F.min_by(F.struct("toks", "barr"), "doc_id").alias("s"))
-        .select("tset", F.col("s.toks").alias("toks"), F.col("s.barr").alias("barr"))
+        .groupBy("tset")
+        .agg(
+            F.min_by("toks", "doc_id").alias("toks"),
+            F.collect_list("doc_id").alias("ids"),
+        )
+        .select("toks", "ids")
         .cache()
     )
-    band_rows = sig.select(
-        "tset", F.size("toks").alias("sz"), "barr"
-    ).select("tset", "sz", "barr", F.posexplode("barr").alias("band", "bsig"))
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    # r11: first-agreeing-band emission (same device as dedup_minhash_lsh —
-    # the (band, bsig) equi-key implies agreement AT `band`, the residual
-    # scalar conjuncts require every earlier band to differ) replaces the
-    # 2.6M-row DISTINCT re-shuffle; the emitted pair SET is identical (a
-    # pair agreeing anywhere has exactly one first agreement), which is
-    # all the set-semantics oracle observes.
-    no_earlier_band_agrees = F.lit(True)
-    for i in range(_N_BANDS - 1):
-        no_earlier_band_agrees = no_earlier_band_agrees & (
-            (F.col("a.band") <= i) | (F.col("a.barr")[i] != F.col("b.barr")[i])
-        )
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bsig") == F.col("b.bsig"))
-            & (F.col("a.tset") < F.col("b.tset")),
-        )
-        .where(no_earlier_band_agrees)
-        # r11 size pre-filter (see dedup_minhash_lsh): |A∩B| <= min(|A|,|B|)
-        # makes 19*min(sz) >= 9*(sz_a+sz_b) a necessary condition of the
-        # Jaccard >= 0.9 verify below — one-int comparison here spares the
-        # token-array joins + array_intersect for size-mismatched pairs;
-        # survivor set provably unchanged.
-        .where(
-            19 * F.least(F.col("a.sz"), F.col("b.sz"))
-            >= 9 * (F.col("a.sz") + F.col("b.sz"))
-        )
-        .select(F.col("a.tset").alias("set_a"), F.col("b.tset").alias("set_b"))
+    bsig = F.array(
+        *[F.slice("mh", b * _ROWS_PER_BAND + 1, _ROWS_PER_BAND) for b in range(_N_BANDS)]
     )
-    ra = sig.select(F.col("tset").alias("set_a"), F.col("toks").alias("toks_a"))
-    rb = sig.select(F.col("tset").alias("set_b"), F.col("toks").alias("toks_b"))
-    inter = F.size(F.array_intersect("toks_a", "toks_b"))
-    union = F.size("toks_a") + F.size("toks_b") - inter
-    jac = inter / union
-    # single-reference exact integer threshold: array_intersect once per
-    # candidate (see dedup_minhash_lsh), rounded jaccard only for survivors
-    pass_09 = (19 * inter) >= (9 * (F.size("toks_a") + F.size("toks_b")))
-    ver = (
-        cand.join(ra, "set_a")
-        .join(rb, "set_b")
-        .where(pass_09)
-        .select("set_a", "set_b", F.round(jac, 6).alias("jaccard"))
+    band_rows = with_minhash(reps).select(
+        "toks", "ids", "mh", F.posexplode(bsig).alias("band", "bsig")
     )
-    ma = members.select(F.col("tset").alias("set_a"), F.col("doc_id").alias("da"))
-    mb = members.select(F.col("tset").alias("set_b"), F.col("doc_id").alias("db"))
+    # an explicit partition count: AQE would coalesce these few MB of band
+    # rows into one task, and the pair kernel is CPU-bound
+    pairs = (
+        band_rows.repartition(spark.sparkContext.defaultParallelism, "band", "bsig")
+        .sortWithinPartitions("band", "bsig")
+        .select("band", "toks", "ids", "mh")
+        .mapInArrow(lsh_pairs, _PAIR_SCHEMA)
+    )
+    jac = F.round(F.col("ix") / (F.col("la") + F.col("lb") - F.col("ix")), 6)
     cross = (
-        ver.join(ma, "set_a")
-        .join(mb, "set_b")
+        pairs.select(F.explode("ids_a").alias("da"), "ids_b", jac.alias("jaccard"))
+        .select("da", F.explode("ids_b").alias("db"), "jaccard")
         .select(
             F.least("da", "db").alias("doc_a"),
             F.greatest("da", "db").alias("doc_b"),
             "jaccard",
         )
     )
-    m1, m2 = members.alias("m1"), members.alias("m2")
-    within = m1.join(
-        m2,
-        (F.col("m1.tset") == F.col("m2.tset"))
-        & (F.col("m1.doc_id") < F.col("m2.doc_id")),
-    ).select(
-        F.col("m1.doc_id").alias("doc_a"),
-        F.col("m2.doc_id").alias("doc_b"),
-        F.lit(1.0).alias("jaccard"),
+    within = (
+        reps.where(F.size("ids") > 1)
+        .select(F.explode("ids").alias("doc_a"), "ids")
+        .select("doc_a", F.explode("ids").alias("doc_b"))
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", F.lit(1.0).alias("jaccard"))
     )
     return cross.unionAll(within)

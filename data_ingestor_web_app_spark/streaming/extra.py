@@ -117,13 +117,12 @@ def stream_incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFr
     rows_per_band = _N_HASHES // _N_BANDS
 
     def band_rows(docs: DataFrame) -> DataFrame:
-        # CW-family signature (wave159._MINHASH_FOLD over the token array);
-        # a band's bucket key is the ':'-joined minhash run — a plain string
-        # both engines compute bit-identically
-        sig = docs.select(
-            "doc_id",
-            F.array_distinct(F.split("text", " ")).alias("toks"),
-        ).select("doc_id", F.expr(_w159._MINHASH_FOLD).alias("mh"))
+        # CW-family signature (wave159's signature kernel over the token
+        # array); a band's bucket key is the ':'-joined minhash run — a
+        # plain string both engines compute bit-identically
+        sig = _w159.with_minhash(
+            docs.select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
+        ).select("doc_id", "mh")
         return sig.select(
             "doc_id",
             F.posexplode(

@@ -382,8 +382,9 @@ def test_round6_link_prediction_no_cartesian(spark, sf_small):
 
 
 def test_round6_minhash_exact_band_join_is_equijoin(spark, sf_small):
-    # the band-bucket candidate join must be hash/sort-merge on (band, sig),
-    # never a nested-loop over representatives
+    # band rows meet their bucket through a hash repartition on
+    # (band, band signature) into the pair kernel; nothing may pair the
+    # representatives through a product or a nested-loop join
     p = plan(spark, "dedup_minhash_lsh_exact", sf_small)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
