@@ -116,24 +116,6 @@ def to_logentries(p: DataFrame) -> DataFrame:
     )
 
 
-def logentries_from_socket_lines(lines: DataFrame, client_ip: str) -> DataFrame:
-    """R1 live path: turn a socket-source stream of framed lines
-    ``conn_id|epoch_sec|payload`` into LogEntry records via the same
-    projection as the batch path (reference/main.go:199-257 accepts TCP
-    payloads and main.go:101-114 builds the record; here the socket source
-    supplies `value` and the enrichment is shared with ingest_records).
-    The receive timestamp rides in the frame so the record derivation stays
-    deterministic (never current_timestamp)."""
-    parts = F.split("value", r"\|", 3)
-    p = lines.select(
-        parts.getItem(0).cast("long").alias("conn_id"),
-        parts.getItem(2).cast("binary").alias("payload"),
-        F.lit(client_ip).alias("client_ip"),
-        F.timestamp_seconds(parts.getItem(1).cast("long")).alias("recv_ts"),
-    )
-    return to_logentries(p)
-
-
 def _go_quote(b: bytes) -> str:
     """Replicate Go's fmt.Sprintf("%q", b) for the payload preview
     (main.go:113). Go double-quotes the bytes and escapes per strconv.Quote:

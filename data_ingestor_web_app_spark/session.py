@@ -14,6 +14,12 @@ stream (three log renames), most of its ``walCommit`` and
 ``commitOffsets`` time. ``FileSystem.rename`` on a local path is a single
 rename(2) with no fork. That holds because the master is always
 ``local[N]``, so every checkpoint sits on a local POSIX filesystem.
+
+Python workers import the package's module-level functions (pandas UDFs,
+``mapInArrow`` kernels) by name when they unpickle them, so the checkout
+root is on their ``PYTHONPATH`` through ``spark.executorEnv.PYTHONPATH``.
+PySpark prepends it to the worker's inherited ``PYTHONPATH``; a tool run
+from any directory then works the same as one run from the checkout.
 """
 
 from __future__ import annotations
@@ -23,11 +29,11 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CHECKOUT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
     app_name: str = "data-ingestor-spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -36,13 +42,12 @@ def get_spark(
     (tens of thousands of partitions); AQE coalesces small ones at runtime,
     so over-provisioning the static number is the safe direction.
     """
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -56,6 +61,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", CHECKOUT_ROOT)
         # Checkpoints are local (the master is local[N]): FileSystem.rename
         # is one rename(2), where FileContext forks readlink on every rename
         # (see the module docstring). Spark itself falls back to this manager

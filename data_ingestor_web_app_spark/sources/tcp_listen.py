@@ -1,12 +1,10 @@
-"""Listen-mode TCP ingestion — the faithful R1 parity path.
+"""Listen-mode TCP ingestion — the engine's one live ingest path (R1).
 
 The reference is a TCP *server*: it binds, accepts connections, reads each
 connection's bytes until EOF/idle, writes an ack, and makes a LogEntry
-(/root/reference/main.go:199-257, 266-318). Spark's built-in `socket`
-source inverts that role (it dials out), which
-`streaming/socket_ingest.py` documents honestly. This module closes the
-gap with a custom Python DataSource (Spark 4 `SimpleDataSourceStreamReader`)
-that LISTENS: `echo 'test data' | nc <host> <port>` — the reference's own
+(reference main.go:199-257, 266-318). This module does the same with a
+custom Python DataSource (Spark 4 `SimpleDataSourceStreamReader`) that
+LISTENS: `echo 'test data' | nc <host> <port>` — the reference's own
 deploy smoke (deploy.sh:174) — works verbatim against the engine.
 
 Each record is one row of ``SCHEMA``: ``conn_id bigint, client_ip string,
@@ -16,9 +14,8 @@ need not be valid UTF-8), so no decoded copy is carried.
 
 Semantics mirrored from main.go:
 - accept loop with a monotonically increasing connection ordinal
-  (main.go:219, 234: `atomic.AddUint64(&connectionID, 1)`) — this is a
-  TRUE per-connection id, unlike the content hash the dial-mode source
-  must fall back to;
+  (main.go:219, 234: `atomic.AddUint64(&connectionID, 1)`) — a true
+  per-connection id, not a content hash;
 - reject-above-cap admission (main.go:252-255): a connection semaphore of
   `maxConnections`; when full the connection is closed IMMEDIATELY without
   reading — the shed-load leg. Rejections are emitted IN-BAND as records
@@ -36,13 +33,12 @@ Semantics mirrored from main.go:
 - per-record ack written back on the connection (main.go:316-317):
   "Data processed successfully\\nBytes: N\\nConnection ID: K\\n".
 
-Durability: with the ``journalDir`` option, records are fsync'd to a
-write-ahead journal BEFORE the ack is written (ack ⇒ durable), commit()
+Durability: every record is fsync'd to a write-ahead journal in the
+required ``journalDir`` BEFORE the ack is written (ack ⇒ durable), commit()
 persists the committed offset, and restart replays the un-committed tail
 from the journal — exactly-once delivery of acked records across a crash,
 which is the crash-proof version of the reference's drain-on-shutdown
-guarantee (main.go:259-262). Without it, records are driver-buffered:
-replayable within a run, at-most-once across restarts.
+guarantee (main.go:259-262).
 
 Scale posture: a single listening socket is inherently one node — the
 reference's own design (318 LoC, one process). The SimpleDataSourceStream
@@ -105,11 +101,30 @@ def _journal_load(journal_dir: str) -> tuple[dict[int, tuple], int]:
     return records, committed
 
 
+def _journal_range(
+    journal_dir: str, loaded: dict[int, tuple], start: int, end: int, gap: str, refusal: str
+) -> list[tuple]:
+    """The journaled records at indices [start, end), in order.
+
+    Ack ⇒ durable: every index in the range was fsync'd before its client
+    ack went out, so a hole is silent loss of acknowledged data (a torn
+    FINAL line is different — it was never acked and is not in the range).
+    Raise ``gap`` rather than yield fewer records than the range promises."""
+    missing = [i for i in range(start, end) if i not in loaded]
+    if missing:
+        raise RuntimeError(
+            f"{gap}: offsets {missing[:10]}{'...' if len(missing) > 10 else ''} "
+            f"absent from the journal at {journal_dir!r} for the range "
+            f"[{start}, {end}); {refusal}"
+        )
+    return [loaded[i] for i in range(start, end)]
+
+
 class _Listener:
     """The accept loop + worker pool + record buffer (main.go:199-318).
 
-    With ``journal_dir`` set, every record is appended to a write-ahead
-    journal (fsync'd BEFORE the client's ack is written), and commit()
+    Every record is appended to a write-ahead journal in ``journal_dir``
+    (fsync'd BEFORE the client's ack is written), and commit()
     persists the committed offset — so a restarted listener resumes with
     every acked-but-uncommitted record intact and its connection ordinal
     continuing monotonically (main.go:259-262 drain guarantee, made
@@ -123,7 +138,7 @@ class _Listener:
         max_connections: int,
         max_workers: int,
         read_timeout_sec: float,
-        journal_dir: str | None = None,
+        journal_dir: str,
     ):
         self.host = host
         self.port = port
@@ -134,45 +149,29 @@ class _Listener:
         self._base = 0
         self._conn_ordinal = 0
         self._journal_dir = journal_dir
-        self._journal_f = None
-        if journal_dir:
-            os.makedirs(journal_dir, exist_ok=True)
-            loaded, committed = _journal_load(journal_dir)
-            if loaded:
-                # resume: memory = journal beyond the committed offset;
-                # ordinals continue after the largest journaled conn_id
-                top = max(loaded)
-                self._base = committed
-                # Ack ⇒ durable: every index in [committed, top] was fsync'd
-                # before its client ack went out, so a hole here is silent
-                # loss of acknowledged data (a torn FINAL line is different —
-                # it shrinks `top` and was never acked). Refuse to resume
-                # rather than silently yield fewer records than the offset
-                # range promises (VERDICT r8 "What's wrong" #1).
-                missing = [
-                    i for i in range(committed, top + 1) if i not in loaded
-                ]
-                if missing:
-                    raise RuntimeError(
-                        "WAL gap: journal %r is missing acked record "
-                        "indices %s within committed range [%d, %d]; "
-                        "refusing to resume with silent data loss"
-                        % (journal_dir, missing[:10], committed, top)
-                    )
-                self._records = [loaded[i] for i in range(committed, top + 1)]
-                self._conn_ordinal = max(r[0] for r in loaded.values())
-            # compact: rewrite the journal to only the uncommitted tail so
-            # it cannot grow without bound across restarts (in-session it is
-            # append-only; rotation beyond that is the retention ops' job)
-            rec_path, _ = _journal_paths(journal_dir)
-            tmp = rec_path + ".tmp"
-            with open(tmp, "w") as f:
-                for i in sorted(k for k in loaded if k >= committed):
-                    f.write(self._journal_line(i, loaded[i]))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, rec_path)
-            self._journal_f = open(rec_path, "a")  # noqa: SIM115 (long-lived WAL handle)
+        os.makedirs(journal_dir, exist_ok=True)
+        loaded, committed = _journal_load(journal_dir)
+        if loaded:
+            # resume: memory = journal beyond the committed offset;
+            # ordinals continue after the largest journaled conn_id
+            self._base = committed
+            self._records = _journal_range(
+                journal_dir, loaded, committed, max(loaded) + 1,
+                "WAL gap", "refusing to resume with silent data loss",
+            )
+            self._conn_ordinal = max(r[0] for r in loaded.values())
+        # compact: rewrite the journal to only the uncommitted tail so it
+        # cannot grow without bound across restarts (in-session it is
+        # append-only; rotation beyond that is the retention ops' job)
+        rec_path, _ = _journal_paths(journal_dir)
+        tmp = rec_path + ".tmp"
+        with open(tmp, "w") as f:
+            for i in sorted(k for k in loaded if k >= committed):
+                f.write(self._journal_line(i, loaded[i]))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, rec_path)
+        self._journal_f = open(rec_path, "a")  # noqa: SIM115 (long-lived WAL handle)
         self._slots = threading.Semaphore(max_connections)
         self._pool = ThreadPoolExecutor(max_workers=max_workers)
         self._stopped = threading.Event()
@@ -224,13 +223,14 @@ class _Listener:
     def _append(self, conn_id: int, client_ip: str, payload: bytes, kind: str) -> None:
         rec = (conn_id, client_ip, payload, kind, self._now_ms())
         with self._lock:
-            if self._journal_f is not None:
-                # WAL-before-ack: the record is durable before the caller
-                # (e.g. _handle's ack write) can tell the client "processed"
-                idx = self._base + len(self._records)
-                self._journal_f.write(self._journal_line(idx, rec))
-                self._journal_f.flush()
-                os.fsync(self._journal_f.fileno())
+            # WAL-before-ack: the record is durable before the caller (e.g.
+            # _handle's ack write) can tell the client "processed". After
+            # stop() the journal is closed, so the write raises and no ack
+            # goes out.
+            idx = self._base + len(self._records)
+            self._journal_f.write(self._journal_line(idx, rec))
+            self._journal_f.flush()
+            os.fsync(self._journal_f.fileno())
             self._records.append(rec)
 
     def _accept_loop(self) -> None:
@@ -285,27 +285,26 @@ class _Listener:
                 pass
             self._slots.release()
 
+    def _check_start(self, op: str, start_idx: int) -> None:
+        # A checkpoint offset below the compacted journal base means the
+        # caller is asking for records that were already pruned — a
+        # negative Python slice would silently return the wrong tail
+        # records instead of failing. Caller holds _lock.
+        if start_idx < self._base:
+            raise ValueError(
+                f"{op} start_idx {start_idx} precedes committed journal "
+                f"base {self._base}: stale checkpoint vs compacted WAL"
+            )
+
     def drain(self, start_idx: int) -> tuple[list[tuple], int]:
         with self._lock:
-            # A checkpoint offset below the compacted journal base means the
-            # caller is asking for records that were already pruned — a
-            # negative Python slice would silently return the wrong tail
-            # records instead of failing.
-            if start_idx < self._base:
-                raise ValueError(
-                    f"drain start_idx {start_idx} precedes committed journal "
-                    f"base {self._base}: stale checkpoint vs compacted WAL"
-                )
+            self._check_start("drain", start_idx)
             rows = self._records[start_idx - self._base :]
             return rows, self._base + len(self._records)
 
     def slice(self, start_idx: int, end_idx: int) -> list[tuple]:
         with self._lock:
-            if start_idx < self._base:
-                raise ValueError(
-                    f"slice start_idx {start_idx} precedes committed journal "
-                    f"base {self._base}: stale checkpoint vs compacted WAL"
-                )
+            self._check_start("slice", start_idx)
             return self._records[start_idx - self._base : end_idx - self._base]
 
     def prune(self, end_idx: int) -> None:
@@ -313,14 +312,13 @@ class _Listener:
         # outside _lock: handlers' fsyncs and this one do not queue behind
         # each other. Persist FIRST (atomic rename), then drop memory — a
         # crash between the two just re-prunes.
-        if self._journal_dir:
-            _, com_path = _journal_paths(self._journal_dir)
-            tmp = com_path + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(end_idx))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, com_path)
+        _, com_path = _journal_paths(self._journal_dir)
+        tmp = com_path + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(str(end_idx))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, com_path)
         with self._lock:
             keep = end_idx - self._base
             if keep > 0:
@@ -335,34 +333,33 @@ class _Listener:
             pass
         self._pool.shutdown(wait=False)
         with self._lock:
-            if self._journal_f is not None:
-                try:
-                    self._journal_f.close()
-                except OSError:
-                    pass
-                self._journal_f = None
+            try:
+                self._journal_f.close()
+            except OSError:
+                pass
 
 
 class TcpListenStreamReader(SimpleDataSourceStreamReader):
     """Offsets are absolute record indexes.
 
-    Delivery semantics are journal-dependent, stated exactly:
-
-    - WITHOUT ``journalDir``: within one run, records stay buffered until
-      commit() so the driver-side prefetch cache can replay a failed batch;
-      across a restart the buffer is gone and un-committed records are
-      LOST — at-most-once across restarts (a live accepted-socket source
-      has nowhere to re-read from by nature).
-    - WITH ``journalDir``: every record is fsync'd to a write-ahead journal
-      before the client's ack, and commit() persists the committed offset.
-      readBetweenOffsets() then replays any offset range straight from the
-      journal — including on pickled executor copies, which never bind the
-      port — so a kill-and-restart from checkpoint redelivers every acked
-      record exactly once (offset-ranged replay + Spark's idempotent file
-      sink), with connection ordinals continuing monotonically."""
+    Delivery is exactly-once for every acked record: each record is fsync'd
+    to the write-ahead journal in ``journalDir`` before the client's ack,
+    and commit() persists the committed offset. readBetweenOffsets() replays
+    any un-committed offset range — from the listener's buffer in the
+    process that owns the port, straight from the journal on pickled
+    executor copies, which never bind it — so a kill-and-restart from
+    checkpoint redelivers every acked record exactly once (offset-ranged
+    replay + Spark's idempotent file sink), with connection ordinals
+    continuing monotonically."""
 
     def __init__(self, options: dict):
+        if not options.get("journaldir"):
+            raise ValueError(
+                "tcplisten requires the journalDir option: records are "
+                "journaled before they are acked"
+            )
         self._options = options
+        self._journal_dir = options["journaldir"]
         self._listener: _Listener | None = None
 
     def _ensure(self) -> _Listener:
@@ -373,13 +370,13 @@ class TcpListenStreamReader(SimpleDataSourceStreamReader):
                 max_connections=int(self._options.get("maxconnections", 1000)),
                 max_workers=int(self._options.get("maxworkers", 100)),
                 read_timeout_sec=float(self._options.get("readtimeoutsec", 1.0)),
-                journal_dir=self._options.get("journaldir") or None,
+                journal_dir=self._journal_dir,
             )
         return self._listener
 
     def initialOffset(self) -> dict:
         lst = self._ensure()
-        # journaled restart without a checkpoint: resume past pruned history
+        # restart without a checkpoint: resume past pruned history
         return {"idx": lst._base}
 
     def read(self, start: dict):
@@ -392,27 +389,20 @@ class TcpListenStreamReader(SimpleDataSourceStreamReader):
         # notably every empty batch, and the post-restart replay of the last
         # un-committed batch). A copy must NEVER bind the port: the one live
         # listener belongs to the driver-side runner process that calls
-        # initialOffset()/read(). Journaled mode replays from the WAL file
-        # (shared filesystem, no socket); un-journaled mode has nothing to
-        # replay from — the documented at-most-once leg.
+        # initialOffset()/read(). A copy replays from the WAL file (shared
+        # filesystem, no socket).
         s, e = int(start["idx"]), int(end["idx"])
         if self._listener is not None:
             return iter(self._listener.slice(s, e))
-        jdir = self._options.get("journaldir")
-        if jdir and s < e:
-            loaded, _ = _journal_load(jdir)
-            # Under the exactly-once contract every offset in [s, e) MUST be
-            # in the WAL; a gap means corruption/truncation, and silently
-            # yielding fewer rows would be silent data loss. Fail loudly.
-            missing = [i for i in range(s, e) if i not in loaded]
-            if missing:
-                raise RuntimeError(
-                    f"journal replay gap: offsets {missing[:5]}"
-                    f"{'...' if len(missing) > 5 else ''} absent from WAL at "
-                    f"{jdir} for requested range [{s}, {e})"
-                )
-            return iter(loaded[i] for i in range(s, e))
-        return iter(())
+        if s >= e:
+            return iter(())
+        loaded, _ = _journal_load(self._journal_dir)
+        return iter(
+            _journal_range(
+                self._journal_dir, loaded, s, e,
+                "journal replay gap", "refusing to replay fewer records than the range holds",
+            )
+        )
 
     def commit(self, end: dict) -> None:
         self._ensure().prune(int(end["idx"]))
@@ -424,9 +414,9 @@ class TcpListenStreamReader(SimpleDataSourceStreamReader):
 
 class TcpListenDataSource(DataSource):
     """format("tcplisten"); options: host, port, maxConnections, maxWorkers,
-    readTimeoutSec, journalDir (write-ahead journal enabling exactly-once
-    redelivery across restarts). Option keys arrive case-insensitively
-    lowered."""
+    readTimeoutSec, and the required journalDir (the write-ahead journal
+    that makes redelivery across restarts exactly-once). Option keys
+    arrive case-insensitively lowered."""
 
     @classmethod
     def name(cls) -> str:
@@ -455,29 +445,31 @@ def tcp_listen_stream(
     max_connections: int = 1000,
     max_workers: int = 100,
     read_timeout_sec: float = 1.0,
-    journal_dir: str | None = None,
+    *,
+    journal_dir: str,
 ) -> DataFrame:
-    """The raw listen-mode stream: data + rejected + empty records.
-    Pass ``journal_dir`` for crash-proof exactly-once redelivery (WAL)."""
+    """The raw listen-mode stream: data + rejected + empty records, each
+    journaled in ``journal_dir`` before its ack (exactly-once redelivery
+    across a crash)."""
     register(spark)
-    reader = (
+    return (
         spark.readStream.format("tcplisten")
         .option("host", host)
         .option("port", str(port))
         .option("maxConnections", str(max_connections))
         .option("maxWorkers", str(max_workers))
         .option("readTimeoutSec", str(read_timeout_sec))
+        .option("journalDir", journal_dir)
+        .load()
     )
-    if journal_dir:
-        reader = reader.option("journalDir", journal_dir)
-    return reader.load()
 
 
 def tcp_listen_logentry_stream(
     spark: SparkSession, host: str, port: int, **kw
 ) -> DataFrame:
-    """R1 end-to-end, listen mode: accepted TCP payloads → LogEntry records
-    via the SAME shared R4-R10 projection as every other ingest path.
+    """R1 end-to-end: accepted TCP payloads → LogEntry records via the
+    shared R4-R10 projection of the batch ingest query. ``kw`` goes to
+    `tcp_listen_stream` and must include ``journal_dir``.
     kind='rejected'/'empty' records carry zero-byte payloads, so the shared
     byte_count > 0 filter drops them exactly like main.go:298-301 never
     builds a data record for them."""

@@ -1,9 +1,10 @@
 """Structured Streaming runtime helpers.
 
 Maps the reference's operational dataflow onto Spark's streaming lifecycle:
-- R1 TCP source        → live socket source in socket_ingest.py (pytest
-                         pushes bytes through a real TCP socket); file-source
-                         replay here for deterministic tests; Kafka in prod.
+- R1 TCP source        → the journaled listen source in
+                         sources/tcp_listen.py (pytest dials it over a real
+                         TCP socket); file-source replay here for
+                         deterministic tests; Kafka in prod.
                          Backpressure via maxFilesPerTrigger replaces the
                          reference's admission semaphore (main.go:237-256)
 - R16 30 s metronome   → trigger(processingTime="30 seconds") in prod;

@@ -66,72 +66,6 @@ def test_watermark_drop_metric_counts_late_rows(spark, sf_small):
     assert dropped == late_windows
 
 
-def test_socket_source_live_ingest(spark, sf_small):
-    """R1 end-to-end over a real TCP socket (reference/main.go:199-257,
-    deploy.sh:174 `nc` smoke): a local server feeds framed payload lines;
-    readStream.format('socket') -> shared LogEntry enrichment -> memory
-    sink. Asserts LogEntry-shaped rows with correct level/byte_count/hex."""
-    import socket
-    import threading
-    import time
-
-    from data_ingestor_web_app_spark.ingest.records import logentries_from_socket_lines
-
-    payloads = {1: "a" * 10, 2: "b" * 250, 3: "hello world"}
-    lines = "".join(f"{cid}|1704067200|{text}\n" for cid, text in payloads.items())
-
-    server = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-    server.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-    server.bind(("127.0.0.1", 0))
-    port = server.getsockname()[1]
-    server.listen(1)
-    done = threading.Event()
-
-    def serve():
-        conn, _ = server.accept()
-        conn.sendall(lines.encode())
-        done.wait(30)  # hold the connection open until the test finishes
-        conn.close()
-
-    t = threading.Thread(target=serve, daemon=True)
-    t.start()
-
-    raw = (
-        spark.readStream.format("socket")
-        .option("host", "127.0.0.1")
-        .option("port", port)
-        .load()
-    )
-    entries = logentries_from_socket_lines(raw, client_ip="127.0.0.1:9999")
-    q = (
-        entries.writeStream.format("memory")
-        .queryName("socket_smoke")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.table("socket_smoke").count() >= len(payloads):
-                break
-            time.sleep(0.5)
-        rows = {r["conn_id"]: r for r in spark.table("socket_smoke").collect()}
-    finally:
-        done.set()
-        q.stop()
-        server.close()
-
-    assert set(rows) == set(payloads)
-    for cid, text in payloads.items():
-        r = rows[cid]
-        assert r["byte_count"] == len(text)
-        assert r["level"] == ("WARN" if len(text) < 200 else "INFO")
-        assert r["binary_data_hex"] == text[:48].encode().hex()
-        assert r["timestamp"] == "2024-01-01T00:00:00Z"
-        assert r["client_host"] == "127.0.0.1"
-        assert r["message"].startswith(f"Received {len(text)} bytes")
-
-
 def test_session_window_gap_semantics(spark, sf_small):
     """Sessions from the streaming query match a hand-computed split."""
     sessions = QUERIES["stream_session"](spark, sf_small).collect()
