@@ -7,8 +7,8 @@ helper computes the identical index with the two-phase sharded prefix-rank:
 1. rank WITHIN each distinct value (``Window.partitionBy(value)`` — per-key
    parallel, the hot partition is a tie group, not the corpus);
 2. ADD the cumulative count of strictly-smaller values, taken from the
-   distinct-value frame (a global window whose input is an Aggregate — the
-   shape tests/test_window_guard.py accepts).
+   distinct-value frame (a global window whose input is an Aggregate — a
+   barrier for the ``window-global-scan`` rule of plans/lint.py).
 
 The result is bit-identical to the single-partition ``row_number`` for any
 total order (value, tiebreak), so oracle SQL that ranks per-row still

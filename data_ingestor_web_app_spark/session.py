@@ -73,8 +73,10 @@ def get_spark(
         )
     )
     # extra_conf only applies to the FIRST session in a process (getOrCreate
-    # reuses an existing one) — used by tools/scale_probe.py to re-enable
-    # the UI REST API for task-time skew measurements.
+    # reuses an existing one). perfbench/run.py passes its warehouse dir and,
+    # on a traced run, the UI settings whose REST API it reads per-layer
+    # figures from; tools/scale_probe.py re-enables the UI REST API for
+    # task-time skew measurements.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1,6 +1,6 @@
-"""Custom Python DataSource: the reference's payload stream as a Spark 4
-data source (the closest Spark-native analogue of R1's TCP listener,
-/root/reference/main.go:199-257).
+"""Custom Python DataSource: a deterministic batch generator of the
+reference's payload records. The live TCP listener is
+``sources/tcp_listen.py``.
 
 The reference accepts opaque byte payloads over TCP, one per connection,
 tagged with a connection id and client address. `PayloadDataSource`

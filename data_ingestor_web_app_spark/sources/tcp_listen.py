@@ -54,6 +54,7 @@ from __future__ import annotations
 import base64
 import errno
 import json
+import logging
 import os
 import socket
 import threading
@@ -62,6 +63,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+_log = logging.getLogger(__name__)
 
 SCHEMA = "conn_id bigint, client_ip string, payload binary, kind string, recv_epoch_ms bigint"
 
@@ -278,6 +281,12 @@ class _Listener:
                     pass
             else:
                 self._append(conn_id, client_ip, b"", "empty")
+        except Exception as exc:  # noqa: BLE001 — the pool's future is never read
+            # A journal write or fsync failed: the connection closes with no
+            # ack and the client sees EOF. Record it here, once.
+            _log.exception(
+                "conn %d from %s closed without ack: %r", conn_id, client_ip, exc
+            )
         finally:
             try:
                 conn.close()

@@ -1,21 +1,18 @@
 """One shared build of every registered batch query for the registry-wide
 plan guards.
 
-Four guards inspect every batch builder: the eager-action lint
+Three guards inspect every batch builder: the eager-action lint
 (tests/test_eager_action_lint.py), the output-type guard
-(tests/test_output_types_guard.py), the static-plan lint
-(tests/test_plan_lint.py) and the global-window guard
-(tests/test_window_guard.py). Building ~1,100 queries is minutes of
-Catalyst analysis, and each guard used to pay it on its own. ``sweep``
-builds each query once and derives what every guard checks from that one
-build:
+(tests/test_output_types_guard.py) and the static-plan lint
+(tests/test_plan_lint.py). Building ~1,100 queries is minutes of Catalyst
+analysis, and each guard used to pay it on its own. ``sweep`` builds each
+query once and derives what every guard checks from that one build:
 
 - the build runs with the DataFrame action surface patched to raise (the
   eager lint); names the lint exempts are built unpatched, as before. A
   build that reached an action is redone unpatched before anything else is
   read from it, so the other guards always see the query's real plan;
 - the output schema (output-type guard);
-- the optimized logical plan, audited for global windows (window guard);
 - the static-plan lint, through ``plans.lint.lint_df``, the same path
   ``plans.lint.lint_query`` and tools/lint_plans.py take (plan lint).
 
@@ -33,7 +30,6 @@ from dataclasses import dataclass, field
 from pyspark.sql.classic.dataframe import DataFrame
 
 from data_ingestor_web_app_spark.plans.lint import lint_df
-from data_ingestor_web_app_spark.plans.window_audit import audit_plan
 from data_ingestor_web_app_spark.registry import QUERIES, STREAM_PREFIXES
 
 
@@ -76,8 +72,6 @@ class Built:
     # the unpatched build, and each guard's view of it
     build_error: Exception | None = None
     schema: object = None
-    window_error: Exception | None = None
-    window: list = field(default_factory=list)
     lint_error: Exception | None = None
     lint: list = field(default_factory=list)
 
@@ -92,10 +86,6 @@ def _inspect(spark, df, b: Built) -> None:
     except Exception as exc:  # noqa: BLE001 — analysis failed: a build error
         b.build_error = exc
         return
-    try:
-        b.window = audit_plan(df._jdf.queryExecution().optimizedPlan().treeString())
-    except Exception as exc:  # noqa: BLE001 — a finding for the window guard
-        b.window_error = exc
     try:
         b.lint = lint_df(spark, df)
     except Exception as exc:  # noqa: BLE001 — a finding for the plan lint

@@ -10,7 +10,7 @@ Mechanism: the concrete (classic) DataFrame action surface is monkeypatched
 to RAISE, every registered batch builder is invoked, and any builder that
 trips the probe must be in ``ALLOWED`` — the explicit, reviewed list of
 driver-loop / structural queries whose collects are bounded by construction
-(same enforcement pattern as tests/test_window_guard.py).
+(same enforcement pattern as tests/test_plan_lint.py).
 """
 
 from __future__ import annotations
@@ -18,9 +18,8 @@ from __future__ import annotations
 from data_ingestor_web_app_spark.registry import QUERIES, STREAM_PREFIXES
 from tests.batch_sweep import EagerAction, actions_raise
 
-# r10 (ADVICE r9): isEmpty/show/foreach/foreachPartition added so the
-# enforcing surface matches tools/lint_eager.py's discovery surface — a
-# builder calling df.isEmpty() launches a job just like count().
+# isEmpty/show/foreach/foreachPartition are on the surface too: a builder
+# calling df.isEmpty() launches a job just like count().
 ACTIONS = [
     "count",
     "collect",

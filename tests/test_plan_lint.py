@@ -20,6 +20,11 @@ fail too.
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from data_ingestor_web_app_spark import io
 from data_ingestor_web_app_spark.plans.lint import lint_df, lint_query
 from data_ingestor_web_app_spark.registry import QUERIES, STREAM_PREFIXES
 
@@ -120,15 +125,55 @@ def test_lint_df_keeps_only_hinted_broadcasts(spark, sf_small):
     """A self-join of the raw events scan is broadcast by size at fixture
     scale; the lint plans it without size-based broadcasts, so only an
     explicit hint is flagged."""
-    from pyspark.sql import functions as F
-
-    from data_ingestor_web_app_spark import io
-
     ev = io.table(spark, sf_small, "events")
     keys = ev.select("event_id")
     assert lint_df(spark, ev.join(keys, "event_id")) == []
     hinted = lint_df(spark, ev.join(F.broadcast(keys), "event_id"))
     assert [v.kind for v in hinted] == ["broadcast-fact"]
+
+
+def _global_rank(df, *order):
+    return df.withColumn("rn", F.row_number().over(Window.orderBy(*order)))
+
+
+def _window_flags(spark, df) -> list[str]:
+    return [str(v) for v in lint_df(spark, df) if v.kind == "window-global-scan"]
+
+
+def test_window_rule_flags_global_window_over_raw_scan(spark, sf_small):
+    """A global window over the raw events scan funnels the fact table
+    through one task."""
+    ev = io.table(spark, sf_small, "events")
+    got = _window_flags(spark, _global_rank(ev, "ts", "event_id"))
+    assert got == ["window-global-scan: over raw ['events']"]
+
+
+# Global windows whose input is bounded at any scale factor.
+BOUNDED_WINDOWS = {
+    # an aggregate caps the input at the group count
+    "aggregate": lambda spark, sf: _global_rank(
+        io.table(spark, sf, "events").groupBy("user_id").count(), "user_id"
+    ),
+    # a literal bound on a dense key: the fractional knapsack's item set
+    "key_bounded_filter": lambda spark, sf: _global_rank(
+        io.table(spark, sf, "part").filter(F.col("p_partkey") <= 50),
+        "p_retailprice", "p_partkey",
+    ),
+    # nation has 25 rows at every scale factor
+    "fixed_size_dimension": lambda spark, sf: _global_rank(
+        io.table(spark, sf, "nation"), "n_nationkey"
+    ),
+    # literal rows scan no fixture table: the AIC/BIC ladder's model frame
+    "literal_frame": lambda spark, sf: _global_rank(
+        io.local_df(spark, [(1, 10.0), (2, 8.5), (3, 9.1)], "k INT, aic DOUBLE"),
+        "aic", "k",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BOUNDED_WINDOWS))
+def test_window_rule_clears_bounded_input(spark, sf_small, case):
+    assert _window_flags(spark, BOUNDED_WINDOWS[case](spark, sf_small)) == []
 
 
 def test_allowlist_entries_are_registered():

@@ -5,6 +5,7 @@ connections above the semaphore cap are closed unread (main.go:252-255)."""
 
 from __future__ import annotations
 
+import errno
 import os
 import re
 import socket
@@ -489,6 +490,34 @@ def test_no_record_after_stop(tmp_path):
     with pytest.raises(ValueError):
         lst._append(2, "127.0.0.1:2", b"after", "data")
     assert [r[2] for r in lst._records] == [b"before"]
+
+
+def test_failed_journal_write_is_logged(tmp_path, monkeypatch, caplog):
+    """A handler whose journal write raises sends no ack, and the failure
+    is logged once with the connection, the client and the exception
+    instead of staying in the worker pool's unread future."""
+    import logging
+
+    lst = _Listener(
+        "127.0.0.1", _free_port(), max_connections=4, max_workers=2,
+        read_timeout_sec=5.0, journal_dir=str(tmp_path / "wal"),
+    )
+
+    def disk_full(*args):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(lst, "_append", disk_full)
+    caplog.set_level(logging.ERROR, logger="data_ingestor_web_app_spark.sources.tcp_listen")
+    try:
+        client, ack = _send(lst.port, b"payload")
+    finally:
+        lst.stop()
+    assert ack == ""
+    recs = [r for r in caplog.records if r.name.endswith("sources.tcp_listen")]
+    assert len(recs) == 1, [r.getMessage() for r in recs]
+    msg = recs[0].getMessage()
+    assert msg.startswith(f"conn 1 from {client} closed without ack"), msg
+    assert "No space left on device" in msg
 
 
 def test_journal_is_required():

@@ -8,6 +8,8 @@ saves us, since the driver's hash has no tolerance).
 
 Usage:
     python tools/check_oracle.py [--sf /root/testdata/sf0.01] [names...]
+
+With no names it runs every registered query: the full-registry gate.
 """
 
 from __future__ import annotations
@@ -139,16 +141,13 @@ def main():
     oracles = entry_mod.oracle_sql()
     names = args.names or list(queries)
 
+    from data_ingestor_web_app_spark.io import TABLES
     from data_ingestor_web_app_spark.session import get_spark
 
     spark = get_spark("oracle-check")
 
     con = duckdb.connect()
-    tables = [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    for t in tables:
+    for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{args.sf}/{t}.parquet'")
 
     n_pass = n_fail = n_rows_only = 0
